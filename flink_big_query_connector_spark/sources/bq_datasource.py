@@ -39,7 +39,7 @@ import os
 import sys
 import uuid
 from dataclasses import dataclass
-from datetime import date, datetime
+from datetime import date, datetime, timezone
 from decimal import Decimal
 from typing import Any, Iterable, Iterator, List, Sequence, Tuple
 
@@ -77,14 +77,16 @@ from pyspark.sql.types import (
     FloatType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructType,
     TimestampNTZType,
     TimestampType,
 )
 
-from ..streaming.config import WriterSettings
-from ..streaming.sinks import write_with_retry
+from ..streaming.batching import chunk_rows
+from ..streaming.config import BatchTriggerSettings, WriterSettings
+from ..streaming.sinks import append_chunks
 from .fake_bigquery import DEFAULT_STREAM, FakeBigQuery, default_stream_name
 
 SOURCE_NAME = "fakebigquery"
@@ -208,15 +210,27 @@ def _coerce(v: Any, dt: DataType) -> Any:
         return Decimal(str(v))
     if isinstance(dt, ArrayType):
         return [_coerce(x, dt.elementType) for x in v]
+    if isinstance(dt, StructType):
+        return {f.name: _coerce(v.get(f.name), f.dataType) for f in dt.fields}
+    if isinstance(dt, MapType):
+        return {
+            _coerce(k, dt.keyType): _coerce(x, dt.valueType)
+            for k, x in v.items()
+        }
     return v
 
 
 def _json_default(v: Any) -> Any:
-    from pyspark.sql import Row as _Row
-
-    if isinstance(v, _Row):  # nested struct
-        return v.asDict(recursive=True)
-    return str(v)  # datetime/date/Decimal -> ISO/plain text
+    """Text of the values ``json.dumps`` cannot write, in the sinks'
+    ``to_json`` forms (``serializers.JSON_OPTIONS``): a tz-aware datetime
+    (TIMESTAMP) as UTC with six fractional digits and an offset, a naive
+    one (TIMESTAMP_NTZ) with six digits and no offset, a date as ISO text,
+    a Decimal as its plain string."""
+    if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(timezone.utc)
+        return v.isoformat(timespec="microseconds")
+    return v.isoformat() if isinstance(v, date) else str(v)
 
 
 # ---------------------------------------------------------------------------
@@ -283,23 +297,11 @@ class _ArrowFastPathUnsupported(Exception):
     pass
 
 
-def _session_timezone() -> str:
-    """Spark session timezone, captured DRIVER-side at reader construction
-    (readers are built on the driver, then pickled to workers)."""
-    try:
-        from pyspark.sql import SparkSession
-
-        s = SparkSession.getActiveSession()
-        if s is not None:
-            return s.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        pass
-    return "UTC"
-
-
 def _arrow_parse_type(dt):
-    """Arrow type to PARSE the JSON lines as (temporal/decimal values are
-    stored as strings by the writer and cast after parsing)."""
+    """Arrow type to PARSE a column's JSON values as.  Temporal values are
+    stored as text and cast after parsing; decimals parse directly (from
+    the JVM's number or the DSv2 writers' string); lists and structs
+    recurse into their children."""
     import pyarrow as pa
 
     if (
@@ -307,32 +309,28 @@ def _arrow_parse_type(dt):
         or pa.types.is_floating(dt)
         or pa.types.is_boolean(dt)
         or pa.types.is_string(dt)
+        or pa.types.is_decimal(dt)
     ):
         return dt
     if pa.types.is_list(dt):
         return pa.list_(_arrow_parse_type(dt.value_type))
-    if (
-        pa.types.is_timestamp(dt)
-        or pa.types.is_date(dt)
-        or pa.types.is_decimal(dt)
-    ):
+    if pa.types.is_struct(dt):
+        return pa.struct(
+            [pa.field(f.name, _arrow_parse_type(f.type)) for f in dt]
+        )
+    if pa.types.is_timestamp(dt) or pa.types.is_date(dt):
         return pa.string()
     raise _ArrowFastPathUnsupported(str(dt))
 
 
 def _arrow_read_slice(
-    data_path: str,
-    spark_schema: StructType,
-    start: int,
-    end: int,
-    session_tz: str = "UTC",
+    data_path: str, spark_schema: StructType, start: int, end: int
 ):
     """Parse the JSON-lines stream file in C++, slice [start, end), and
     cast to the table's Arrow schema.  A real backend would serve the range
     directly (a Storage READ API stream); here planning is row-indexed so
     the parse covers the file and the slice is zero-copy."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.json as pj
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -348,22 +346,10 @@ def _arrow_read_slice(
         read_options=pj.ReadOptions(use_threads=False),
         parse_options=opts,
     ).slice(start, end - start)
-    cols = []
-    for i, f in enumerate(target):
-        col = tbl.column(i)
-        if not col.type.equals(f.type):
-            if pa.types.is_timestamp(f.type) and f.type.tz is not None:
-                try:
-                    # offset-carrying text (JVM to_json) casts directly
-                    col = col.cast(f.type)
-                except pa.ArrowInvalid:
-                    # session-local wall-clock text (Python json.dumps):
-                    # parse naive, pin the session zone, then convert
-                    naive = col.cast(pa.timestamp(f.type.unit))
-                    col = pc.assume_timezone(naive, timezone=session_tz).cast(f.type)
-            else:
-                col = col.cast(f.type)  # ISO text -> ntz-timestamp/date/decimal
-        cols.append(col)
+    cols = [
+        col if col.type.equals(f.type) else col.cast(f.type)  # ISO text
+        for col, f in zip(tbl.columns, target)
+    ]
     return pa.Table.from_arrays(cols, schema=target)
 
 
@@ -445,7 +431,6 @@ class FakeBigQueryReader(DataSourceReader):
         )
         self.filters: List[Filter] = []
         self.suffix_filters: List[Filter] = []
-        self.session_tz = _session_timezone()
 
     def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
         """Accept every single-column comparison we can evaluate row-side
@@ -509,82 +494,93 @@ class FakeBigQueryReader(DataSourceReader):
         return splits
 
     def read(self, partition: _RangeSplit) -> Iterator:
-        """Yield Arrow RecordBatches: parse the stream file with Arrow's
-        C++ JSON-lines reader, slice the partition's row range, evaluate
-        the pushed filters with Arrow compute kernels, and stream the
-        result to the JVM as columnar Arrow — the Python-source analogue
-        of the Storage READ API's Arrow wire format.  Falls back to the
-        row-at-a-time path for types the fast path can't cast."""
-        if partition.end <= partition.start:
-            return
-        table = partition.table or self.table
-        # wildcard reads: parse the DATA fields, inject the per-split
-        # constant suffix column at its schema position afterwards
-        data_schema = StructType(
-            [f for f in self.out_schema.fields if f.name != SUFFIX_COL]
+        return _read_split(
+            self.root, partition.table or self.table, self.out_schema,
+            self.filters, partition,
         )
-        has_suffix = len(data_schema.fields) != len(self.out_schema.fields)
-        bq = FakeBigQuery(self.root)
-        data_path, _ = bq._stream_paths(table, partition.stream)
-        if has_suffix and not data_schema.fields:
-            # degenerate projection: ONLY the pseudo-column was selected
-            n = partition.end - partition.start
-            yield from ((partition.suffix,) for _ in range(n))
-            return
-        try:
-            tbl = _arrow_read_slice(
-                data_path,
-                data_schema,
-                partition.start,
-                partition.end,
-                self.session_tz,
-            )
-        except _ArrowFastPathUnsupported:
-            yield from self._read_rows(data_path, partition)
-            return
-        except Exception as e:  # unparseable text for the target type etc.
-            import pyarrow as pa
 
-            if not isinstance(e, pa.ArrowInvalid):
-                raise
-            yield from self._read_rows(data_path, partition)
-            return
-        for f in self.filters:
-            mask = _arrow_mask(f, tbl)
-            tbl = tbl.filter(mask)  # null mask entries drop (SQL 3VL)
-        if has_suffix:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
 
-            target = to_arrow_schema(self.out_schema)
-            const = pa.array(
-                [partition.suffix] * tbl.num_rows, type=pa.string()
-            )
-            cols = [
-                const if f.name == SUFFIX_COL else tbl.column(f.name)
-                for f in target
-            ]
-            tbl = pa.Table.from_arrays(cols, schema=target)
-        yield from tbl.to_batches(max_chunksize=_ARROW_BATCH_ROWS)
+def _read_split(
+    root: str,
+    table: str,
+    out_schema: StructType,
+    filters: List[Filter],
+    split: _RangeSplit,
+) -> Iterator:
+    """Read one (stream, row-range) split — the split reader of batch and
+    streaming reads alike.
 
-    def _read_rows(self, data_path: str, partition: _RangeSplit) -> Iterator[Tuple]:
-        fields = self.out_schema.fields
-        filters = self.filters
-        with open(data_path) as f:
-            for i, line in enumerate(f):
-                if i < partition.start:
-                    continue
-                if i >= partition.end:
-                    break
-                raw = json.loads(line)
-                row = {
-                    fld.name: partition.suffix
-                    if fld.name == SUFFIX_COL
-                    else _coerce(raw.get(fld.name), fld.dataType)
-                    for fld in fields
-                }
-                if all(_eval_filter(flt, row) for flt in filters):
-                    yield tuple(row[fld.name] for fld in fields)
+    Yields Arrow RecordBatches: parse the stream file with Arrow's C++
+    JSON-lines reader, slice the split's row range, evaluate the pushed
+    ``filters`` with Arrow compute kernels, and stream the result to the
+    JVM as columnar Arrow — the Python-source analogue of the Storage READ
+    API's Arrow wire format.  Lines the Arrow parse rejects go through
+    :func:`_read_rows` instead."""
+    if split.end <= split.start:
+        return
+    # wildcard reads: parse the DATA fields, inject the per-split constant
+    # suffix column at its schema position afterwards
+    data_schema = StructType(
+        [f for f in out_schema.fields if f.name != SUFFIX_COL]
+    )
+    has_suffix = len(data_schema.fields) != len(out_schema.fields)
+    data_path, _ = FakeBigQuery(root)._stream_paths(table, split.stream)
+    if has_suffix and not data_schema.fields:
+        # degenerate projection: ONLY the pseudo-column was selected
+        yield from ((split.suffix,) for _ in range(split.end - split.start))
+        return
+    import pyarrow as pa
+
+    try:
+        tbl = _arrow_read_slice(data_path, data_schema, split.start, split.end)
+    except (_ArrowFastPathUnsupported, pa.ArrowInvalid):
+        yield from _read_rows(data_path, out_schema, filters, split)
+        return
+    for f in filters:
+        tbl = tbl.filter(_arrow_mask(f, tbl))  # null mask rows drop (3VL)
+    if has_suffix:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(out_schema)
+        const = pa.array([split.suffix] * tbl.num_rows, type=pa.string())
+        cols = [
+            const if f.name == SUFFIX_COL else tbl.column(f.name)
+            for f in target
+        ]
+        tbl = pa.Table.from_arrays(cols, schema=target)
+    yield from tbl.to_batches(max_chunksize=_ARROW_BATCH_ROWS)
+
+
+def _read_rows(
+    data_path: str,
+    out_schema: StructType,
+    filters: List[Filter],
+    split: _RangeSplit,
+) -> Iterator[Tuple]:
+    """Row-at-a-time read of a split, for lines the Arrow parse cannot
+    take: column types without an Arrow parse form (maps, binary), and
+    non-finite doubles written as quoted strings.  ``to_json`` always
+    writes NaN and Infinity as ``"NaN"``/``"Infinity"`` — Spark 4.1 has no
+    write option that changes this — and Arrow's JSON parser rejects a
+    string in a double column, so a sink-written table holding one
+    non-finite double reads here.  (The DSv2 writers' ``json.dumps`` writes
+    them bare, which Arrow parses.)"""
+    fields = out_schema.fields
+    with open(data_path) as f:
+        for i, line in enumerate(f):
+            if i < split.start:
+                continue
+            if i >= split.end:
+                break
+            raw = json.loads(line, parse_float=Decimal)
+            row = {
+                fld.name: split.suffix
+                if fld.name == SUFFIX_COL
+                else _coerce(raw.get(fld.name), fld.dataType)
+                for fld in fields
+            }
+            if all(_eval_filter(flt, row) for flt in filters):
+                yield tuple(row[fld.name] for fld in fields)
 
 
 # ---------------------------------------------------------------------------
@@ -625,7 +621,6 @@ class FakeBigQueryStreamReader(DataSourceStreamReader):
         # identity is an explicit read option; the default (empty) keeps
         # one shared cursor per table for single-reader pipelines.
         self.cursor_id = str(options.get("cursor_id", ""))
-        self.session_tz = _session_timezone()
 
     # -- admission cursor ---------------------------------------------------
     # Spark materializes SEVERAL reader instances for one query (stream
@@ -714,13 +709,10 @@ class FakeBigQueryStreamReader(DataSourceStreamReader):
         # Spark requires >=1 partition per batch; an empty batch reads nothing.
         return splits or [_RangeSplit(DEFAULT_STREAM, 0, 0)]
 
-    def read(self, partition: _RangeSplit) -> Iterator[Tuple]:
-        reader = FakeBigQueryReader.__new__(FakeBigQueryReader)
-        reader.out_schema = self.out_schema
-        reader.root, reader.table = self.root, self.table
-        reader.only_visible, reader.filters = True, []
-        reader.session_tz = self.session_tz
-        return reader.read(partition)
+    def read(self, partition: _RangeSplit) -> Iterator:
+        return _read_split(
+            self.root, self.table, self.out_schema, [], partition
+        )
 
     def commit(self, end: dict) -> None:
         pass  # offsets are durable in Spark's checkpoint WAL
@@ -730,93 +722,59 @@ class FakeBigQueryStreamReader(DataSourceStreamReader):
 
 
 # ---------------------------------------------------------------------------
-# batch writer (at-least-once, default stream)
+# writers (Arrow batches in, JSON lines out)
 # ---------------------------------------------------------------------------
 
-
-@dataclass
-class _AppendResult(WriterCommitMessage):
-    rows: int
-    appends: int
+_SETTINGS = WriterSettings()
 
 
-class FakeBigQueryBatchWriter(DataSourceArrowWriter):
-    """r14: an ARROW writer (``DataSourceArrowWriter``) — the row-based
-    ``DataSourceWriter`` shipped every row to the Python worker as a
-    pickled ``Row``, and the transfer alone was the whole write cost
-    (measured at sf0.1: 1.5 s consume-only vs 1.5 s full — serialization
-    and appends were noise).  Arrow batches cross the boundary columnar;
-    rows serialize to the identical JSON strings (same key order, same
-    ``separators``, same ``_json_default`` text forms), so the backend
-    files and the read-back values are unchanged."""
+def _table_chunks(table: str, batches, batch_rows: int) -> Iterator:
+    """Arrow RecordBatches -> ``(table, chunk)`` for ``append_chunks``.
+
+    ``to_pylist`` yields one dict per row in schema field order, and
+    ``json.dumps`` writes it in the sinks' line form (no spaces,
+    ``_json_default`` text for temporal and decimal values).  Chunks hold
+    at most ``batch_rows`` lines and the append byte budget."""
+    lines = (
+        (table, json.dumps(d, separators=(",", ":"), default=_json_default))
+        for batch in batches
+        for d in batch.to_pylist()
+    )
+    bounds = BatchTriggerSettings(
+        max_count=batch_rows, max_bytes=_SETTINGS.append_budget_bytes
+    )
+    return chunk_rows(lines, bounds, routed=True)
+
+
+class _TableWriter:
+    """Options both Arrow writers read."""
 
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
         self.root = options["root"]
         self.table = options["table"]
         self.batch_rows = int(options.get("batch_rows", _DEFAULT_BATCH_ROWS))
-        self.max_bytes = int(options.get("max_append_bytes", 0)) or None
 
-    def _chunk_strings(self, lines: Iterator[str]) -> Iterator[list[str]]:
-        """Count- and byte-bounded chunking: stay under the AppendRows limit
-        proactively instead of splitting reactively.  Rows are serialized
-        exactly once (by the caller); the backend appends the strings
-        verbatim."""
-        bq_limit = self.max_bytes or FakeBigQuery(self.root).max_append_bytes
-        budget = bq_limit // 2  # headroom: JSON size estimate is pre-framing
-        buf: list[str] = []
-        size = 0
-        for s in lines:
-            sz = len(s) + 1
-            if buf and (len(buf) >= self.batch_rows or size + sz > budget):
-                yield buf
-                buf, size = [], 0
-            buf.append(s)
-            size += sz
-        if buf:
-            yield buf
 
-    def _serialize_rows(self, iterator) -> Iterator[str]:
-        """Row-iterator serialization (the pre-r14 path; kept for callers
-        that still hold plain row tuples)."""
-        names = [f.name for f in self.schema.fields]
-        for row in iterator:
-            yield json.dumps(
-                dict(zip(names, row)), separators=(",", ":"), default=_json_default
-            )
+class FakeBigQueryBatchWriter(_TableWriter, DataSourceArrowWriter):
+    """At-least-once load into the table's default stream (the reference's
+    ``sink/defaultStream/BigQueryDefaultSinkWriter.java:60-80``).  An Arrow
+    writer: batches cross the JVM->Python boundary columnar, where pickled
+    ``Row`` objects would cost more than the appends themselves."""
 
-    def _serialize_batches(self, batches) -> Iterator[str]:
-        """Arrow RecordBatches -> the same JSON strings ``_serialize_rows``
-        produces: ``to_pylist`` yields one dict per row in schema field
-        order (identical key order to ``dict(zip(names, row))``), and the
-        Python values (int/float/str/datetime/Decimal/list/dict) are the
-        same objects the pickled-Row path carried, so ``json.dumps`` with
-        the same options emits byte-identical lines for every type the
-        writers see."""
-        for batch in batches:
-            for d in batch.to_pylist():
-                yield json.dumps(
-                    d, separators=(",", ":"), default=_json_default
-                )
-
-    def _chunks(self, iterator) -> Iterator[list[str]]:
-        """Backward-compatible row-iterator chunking (stream-writer reuse
-        and tests)."""
-        yield from self._chunk_strings(self._serialize_rows(iterator))
-
-    def write(self, iterator) -> _AppendResult:
+    def write(self, iterator) -> WriterCommitMessage:
         """Chunked appends through the full retry state machine (A12-A14:
         status-code branching, pause-retry, recursive oversized split) —
-        the same writer core the foreachBatch sinks use.  ``iterator``
+        the same append loop the foreachBatch sinks use.  ``iterator``
         yields ``pyarrow.RecordBatch`` (the Arrow writer contract)."""
         bq = FakeBigQuery(self.root)
-        stream = default_stream_name(self.table)
-        settings = WriterSettings()
-        rows = appends = 0
-        for chunk in self._chunk_strings(self._serialize_batches(iterator)):
-            rows += write_with_retry(bq, self.table, stream, chunk, -1, settings)
-            appends += 1
-        return _AppendResult(rows=rows, appends=appends)
+        append_chunks(
+            _table_chunks(self.table, iterator, self.batch_rows),
+            lambda table: (default_stream_name(table), -1),
+            lambda table: bq,
+            _SETTINGS,
+        )
+        return WriterCommitMessage()
 
     def commit(self, messages) -> None:
         _merge_schema(self.root, self.table, self.schema)
@@ -828,28 +786,15 @@ class FakeBigQueryBatchWriter(DataSourceArrowWriter):
         pass
 
 
-# ---------------------------------------------------------------------------
-# streaming writer (exactly-once, buffered streams + 2PC)
-# ---------------------------------------------------------------------------
-
-
 @dataclass
 class _BufferedResult(WriterCommitMessage):
-    stream: str
+    stream: str | None
     rows: int
 
 
-class FakeBigQueryStreamWriter(DataSourceStreamArrowWriter):
-    """r14: Arrow variant (``DataSourceStreamArrowWriter``) for the same
-    reason as :class:`FakeBigQueryBatchWriter` — the pickled-Row transfer
-    WAS the write cost; the 2PC protocol (fresh buffered stream per task,
-    offset-checked appends, commit-time flush) is unchanged."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.root = options["root"]
-        self.table = options["table"]
-        self.batch_rows = int(options.get("batch_rows", _DEFAULT_BATCH_ROWS))
+class FakeBigQueryStreamWriter(_TableWriter, DataSourceStreamArrowWriter):
+    """Exactly-once streaming write: each task appends to a fresh BUFFERED
+    stream at explicit offsets and the epoch commit flushes them (2PC)."""
 
     def write(self, iterator) -> _BufferedResult:
         """Append this partition's rows to a FRESH buffered stream at
@@ -857,20 +802,20 @@ class FakeBigQueryStreamWriter(DataSourceStreamArrowWriter):
         a replay after a crash re-writes into a new stream and the orphan
         stays unflushed, so visibility is exactly-once."""
         bq = FakeBigQuery(self.root)
-        stream = bq.create_write_stream(
-            self.table, "BUFFERED",
-            name=f"{self.table}/streams/ep_{uuid.uuid4().hex[:16]}",
+        streams = append_chunks(
+            _table_chunks(self.table, iterator, self.batch_rows),
+            lambda table: (
+                bq.create_write_stream(
+                    table, "BUFFERED",
+                    name=f"{table}/streams/ep_{uuid.uuid4().hex[:16]}",
+                ),
+                0,
+            ),
+            lambda table: bq,
+            _SETTINGS,
         )
-        writer = FakeBigQueryBatchWriter.__new__(FakeBigQueryBatchWriter)
-        writer.schema, writer.root, writer.table = self.schema, self.root, self.table
-        writer.batch_rows, writer.max_bytes = self.batch_rows, None
-        settings = WriterSettings()
-        offset = 0
-        for chunk in writer._chunk_strings(writer._serialize_batches(iterator)):
-            offset += write_with_retry(
-                bq, self.table, stream, chunk, offset, settings
-            )
-        return _BufferedResult(stream=stream, rows=offset)
+        stream, rows = streams.get(self.table, (None, 0))
+        return _BufferedResult(stream=stream, rows=rows)
 
     def commit(self, messages, batchId: int) -> None:
         """FlushRows per stream — the committer half of the 2PC
@@ -887,11 +832,8 @@ class FakeBigQueryStreamWriter(DataSourceStreamArrowWriter):
         permanently invisible."""
         bq = FakeBigQuery(self.root)
         for m in messages:
-            if m is not None:
-                try:
-                    bq.finalize_stream(self.table, m.stream)
-                except Exception:
-                    pass  # stream may not exist if the task died pre-create
+            if m is not None and m.stream is not None:
+                bq.finalize_stream(self.table, m.stream)
 
 
 # ---------------------------------------------------------------------------
@@ -905,7 +847,7 @@ class FakeBigQueryDataSource(DataSource):
     Options: ``root`` (backend directory), ``table``, ``partitions`` (read
     parallelism), ``only_visible`` (read uncommitted rows when false),
     ``fields`` (comma-separated server-side field list, below),
-    ``batch_rows`` / ``max_append_bytes`` (writer chunking).
+    ``batch_rows`` (most rows per writer append).
 
     **Wildcard tables** (batch read only): ``table=prefix*`` unions every
     table whose name starts with the prefix — BigQuery's wildcard-table

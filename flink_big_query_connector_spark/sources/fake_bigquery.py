@@ -104,7 +104,13 @@ class FakeBigQuery:
     def script_append_failures(
         self, statuses: list[str], message: str = "", table: str = "*"
     ) -> None:
-        """Queue failures: each append pops one status (FIFO); "OK" passes."""
+        """Queue failures: each append pops one status (FIFO); "OK" passes.
+
+        Script BEFORE the appends it should hit start.  An append checks
+        for the script file once, without the lock, before popping an
+        entry; an append already past that check when the script appears
+        runs unscripted.  Scripting first makes every later append see
+        the queue."""
         with _locked(self._script_path() + ".lock"):
             script = self._read_script()
             script.setdefault("append_failures", []).extend(
@@ -130,11 +136,10 @@ class FakeBigQuery:
         os.replace(tmp, self._script_path())
 
     def _pop_scripted_failure(self, table: str) -> dict | None:
-        # Fast path (r14): no script file means nothing was ever scripted —
-        # skip the lock + read every append would otherwise pay.  Tests
-        # that script failures create the file before the append runs
-        # (script_append_failures writes it under the lock), so the
-        # existence check can never miss a queued failure.
+        # Fast path: no script file means nothing was ever scripted — skip
+        # the lock + read every append would otherwise pay.  Only an
+        # append racing the FIRST script_append_failures can miss the
+        # queue (see its docstring: script before the appends start).
         if not os.path.exists(self._script_path()):
             return None
         with _locked(self._script_path() + ".lock"):

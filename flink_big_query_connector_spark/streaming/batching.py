@@ -30,11 +30,12 @@ from __future__ import annotations
 import json
 from collections.abc import Iterable, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .config import BatchTriggerSettings
+from .serializers import json_size as row_size_col  # noqa: F401
 
 
 def json_size_of(row) -> int:
@@ -47,29 +48,35 @@ def json_size_of(row) -> int:
 
 
 def chunk_rows(
-    rows: Iterable[dict],
+    rows: Iterable,
     settings: BatchTriggerSettings | None = None,
     size_of=json_size_of,
-) -> Iterator[list[dict]]:
+    routed: bool = False,
+) -> Iterator:
     """Greedy chunker: emit a batch when count >= max_count or accumulated
     bytes >= max_bytes (fires *after* adding the crossing element, like the
-    reference's size trigger which fires on ``accumulated >= maxSize``)."""
+    reference's size trigger which fires on ``accumulated >= maxSize``).
+
+    ``routed=True`` takes ``(table, row)`` pairs and yields
+    ``(table, batch)``: each table keeps its own open batch — the
+    ``RowBatcher`` made incremental, one single-table envelope per batch
+    (``process/RowBatcher.java:22,28-30``) — so memory is bounded by
+    (#tables) x (one batch) and rows never need sorting by table.  Open
+    batches flush at the end in the order their tables first appeared."""
     settings = settings or BatchTriggerSettings()
-    batch: list[dict] = []
-    bytes_acc = 0
-    for row in rows:
+    max_count, max_bytes = settings.max_count, settings.max_bytes
+    batches: dict = {}
+    sizes: dict = {}
+    for item in rows:
+        table, row = item if routed else (None, item)
+        batch = batches.setdefault(table, [])
         batch.append(row)
-        bytes_acc += size_of(row)
-        if len(batch) >= settings.max_count or bytes_acc >= settings.max_bytes:
-            yield batch
-            batch, bytes_acc = [], 0
-    if batch:
-        yield batch
-
-
-def row_size_col(df: DataFrame) -> Column:
-    """Serialized byte size of each row, JVM-side (no Python)."""
-    return F.length(F.to_json(F.struct(*df.columns))).cast("long")
+        size = sizes[table] = sizes.get(table, 0) + size_of(row)
+        if len(batch) >= max_count or size >= max_bytes:
+            del batches[table], sizes[table]
+            yield (table, batch) if routed else batch
+    for table, batch in batches.items():
+        yield (table, batch) if routed else batch
 
 
 def assign_batches_by_count(

@@ -73,6 +73,13 @@ class WriterSettings:
     # function or class) — settings travel inside executor closures.
     executor_provider: "object | None" = None
 
+    @property
+    def append_budget_bytes(self) -> int:
+        """Byte bound of one chunked append: half of ``max_append_bytes``.
+        The headroom covers request framing, which a line's size does not
+        count; an append that is still too large splits in half."""
+        return self.max_append_bytes // 2
+
 
 @dataclass(frozen=True)
 class BatchTriggerSettings:

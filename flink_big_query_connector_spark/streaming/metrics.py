@@ -24,6 +24,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .serializers import json_size
+
 
 @dataclass
 class SinkMetrics:
@@ -212,7 +214,7 @@ def with_observed_sink_metrics(
     Computed JVM-side per micro-batch and reported via
     ``StreamingQueryProgress.observedMetrics[name]`` — zero extra jobs.
     """
-    size = F.length(F.to_json(F.struct(*df.columns)))
+    size = json_size(df)
     return df.observe(
         name,
         F.count(F.lit(1)).alias("rows"),

@@ -17,14 +17,32 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+#: ``to_json`` options of every JSON line the connector writes.  A
+#: TIMESTAMP keeps all six fractional digits and an explicit UTC offset, a
+#: TIMESTAMP_NTZ keeps six digits and no offset — the same text the Arrow
+#: DSv2 writers produce (``bq_datasource._json_default``), so one row is
+#: one line whichever writer stored it.
+JSON_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+    "timeZone": "UTC",
+}
+
+
+def json_line(cols: list[str]) -> Column:
+    """One JSON object per row over ``cols`` (A17): ``to_json(struct)``
+    with :data:`JSON_OPTIONS` — codegen, no UDF."""
+    return F.to_json(F.struct(*cols), JSON_OPTIONS)
+
+
 def json_rows(df: DataFrame) -> Column:
-    """JSON bytes per row (A17): ``to_json(struct(*))`` — codegen, no UDF."""
-    return F.to_json(F.struct(*df.columns)).cast("binary")
+    """JSON bytes per row (A17)."""
+    return json_line(df.columns).cast("binary")
 
 
 def json_size(df: DataFrame) -> Column:
     """Serialized byte size (the ``BigQueryRecord.getSize()`` analogue)."""
-    return F.length(F.to_json(F.struct(*df.columns))).cast("long")
+    return F.length(json_line(df.columns)).cast("long")
 
 
 def noop_rows(df: DataFrame, payload_col: str) -> Column:

@@ -21,6 +21,13 @@ Spark-first port of the reference's three sink implementations:
   replaces Flink's AsyncSinkBase buffering; awaiting all futures before
   the micro-batch returns replaces the Phaser barrier.
 
+Like the reference's one ``BigQuerySinkWriter`` base, each write body
+exists once and routes rows as ``(table, line)``: the single-table sinks
+route to a constant table, :class:`MultiTableSink` and
+:class:`MultiTableBufferedSink` add a routing column.  Every writer —
+these sinks and the DSv2 writers — chunks with ``batching.chunk_rows``
+and appends through :func:`append_chunks`.
+
 The shared retry state machine (:func:`write_with_retry`) mirrors the
 reference's gRPC status branching (``sink/buffered/BigQueryBufferedSinkWriter
 .java:72-190`` and ``sink/async/AsyncBigQuerySinkWriter.java:107-204``):
@@ -31,8 +38,10 @@ split in half recursively, OUT_OF_RANGE and everything else fail the batch.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import random
+import sys
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -40,9 +49,10 @@ from concurrent.futures import TimeoutError as FuturesTimeoutError
 from threading import Condition
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..session import ensure_package_on_executors
-from ..sources.fake_bigquery import DEFAULT_STREAM
+from ..sources.fake_bigquery import DEFAULT_STREAM, default_stream_name
 from .batching import chunk_rows, json_size_of
 from .client_provider import ClientProvider, FakeBigQueryClientProvider
 from .config import BatchTriggerSettings, WriterSettings
@@ -54,19 +64,47 @@ from .errors import (
     StatusCode,
     StreamFinalizedError,
 )
+from .serializers import json_line
 
 RETRYABLE_PAUSE = {StatusCode.INTERNAL, StatusCode.CANCELLED}
 RETRYABLE = {StatusCode.UNAVAILABLE, StatusCode.ABORTED}
 RECREATE_AND_RETRY = {StatusCode.UNKNOWN}
 
 
-def _serialized_json(df: DataFrame) -> DataFrame:
-    """One JSON string per row, produced JVM-side (codegen ``to_json`` —
-    the A17 serializer).  Python writer tasks then append raw lines: no
-    Row materialization, no per-row ``json.dumps``."""
-    from pyspark.sql import functions as F
+def _table_lines(df: DataFrame, table: str | None, table_col: str | None):
+    """The micro-batch as JSON lines, serialized JVM-side (codegen
+    ``to_json``, A17: Python tasks append raw lines, no Row
+    materialization, no per-row ``json.dumps``), plus the function that
+    turns a partition's rows into ``(table, line)`` pairs.
 
-    return df.select(F.to_json(F.struct(*df.columns)).alias("j"))
+    A one-table sink routes every line to the constant ``table`` and ships
+    no table column.  A routed sink ships the ``table_col`` value beside
+    the line of the other columns, so the routing column stays out of the
+    payload (the reference's ``BigQueryRecord.getTable()``)."""
+    if table_col is None:
+        return (
+            df.select(json_line(df.columns)),
+            lambda rows: ((table, r[0]) for r in rows),
+        )
+    data_cols = [c for c in df.columns if c != table_col]
+    return (
+        df.select(F.col(table_col).cast("string"), json_line(data_cols)),
+        lambda rows: rows,
+    )
+
+
+def _chunk_bounds(
+    settings: WriterSettings, trigger: BatchTriggerSettings | None
+) -> BatchTriggerSettings:
+    """Bounds of one append: the trigger's count and size, never more
+    than the append byte budget.  Without a trigger the budget alone
+    bounds a chunk."""
+    budget = settings.append_budget_bytes
+    if trigger is None:
+        return BatchTriggerSettings(max_count=sys.maxsize, max_bytes=budget)
+    return dataclasses.replace(
+        trigger, max_bytes=min(trigger.max_bytes, budget)
+    )
 
 
 class WriterPool:
@@ -242,6 +280,51 @@ def write_with_retry(
             raise AppendException(trace_id, table, stream, offset, attempt, e)
 
 
+def append_chunks(
+    chunks,
+    open_stream,
+    client_for,
+    settings: WriterSettings,
+    metrics=None,
+    registry=None,
+    writer_id: str = "0",
+) -> dict[str, tuple[str, int]]:
+    """The per-stream append loop of every writer: the sinks' write
+    bodies and both DSv2 writers.
+
+    ``chunks`` yields ``(table, rows)``.  A table's first chunk asks
+    ``open_stream(table)`` for ``(stream, offset)``: offset -1 is a
+    default stream (no offsets); otherwise it is the stream's first
+    offset, and it advances by each chunk's LENGTH — not by the post-trim
+    count ``write_with_retry`` returns, because trimmed rows already sit
+    at exactly those offsets.  ``client_for(table)`` is asked per chunk
+    (a ``WriterPool`` round-robins there).  With a ``registry``, each
+    stream's gauges publish after every append.  Returns
+    ``{table: (stream, next_offset)}``."""
+    from .metrics import StreamMetrics
+
+    streams: dict[str, list] = {}
+    for table, rows in chunks:
+        if table not in streams:
+            stream, offset = open_stream(table)
+            sm = (
+                StreamMetrics(table, stream, writer_id)
+                if registry is not None
+                else None
+            )
+            streams[table] = [stream, offset, sm]
+        stream, offset, sm = streams[table]
+        write_with_retry(
+            client_for(table), table, stream, rows, offset, settings,
+            metrics=metrics, stream_metrics=sm,
+        )
+        if offset >= 0:
+            streams[table][1] = offset + len(rows)
+        if sm is not None:
+            registry.publish(sm)
+    return {t: (stream, end) for t, (stream, end, _) in streams.items()}
+
+
 # ---------------------------------------------------------------------------
 # At-least-once: default stream
 # ---------------------------------------------------------------------------
@@ -254,7 +337,13 @@ class DefaultStreamSink:
     parallel (one writer per partition, the per-subtask writer analogue);
     the micro-batch completes only when every partition finished, which is
     the Phaser/flush-on-checkpoint barrier of the reference.
+
+    The write body routes rows as ``(table, line)``; this sink is its
+    one-table case (every line goes to ``table``), :class:`MultiTableSink`
+    adds the routing column.
     """
+
+    table_col: str | None = None  # routed subclasses name the column
 
     def __init__(
         self,
@@ -280,37 +369,30 @@ class DefaultStreamSink:
 
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
         ensure_package_on_executors(df.sparkSession)
-        table = self.table
-        settings, trigger = self.settings, self.trigger
+        settings = self.settings
+        bounds = _chunk_bounds(settings, self.trigger)
         metrics = self.metrics
         registry = self.stream_registry
         provider = self.client_provider
+        lines, route = _table_lines(df, self.table, self.table_col)
 
         def write_partition(rows_iter):
-            from .metrics import StreamMetrics
-
             pool = WriterPool(
                 provider.client,
                 settings.streams_per_table,
                 settings.enable_connection_pool,
             )
-            stream = DEFAULT_STREAM
-            sm = (
-                StreamMetrics(table, stream, uuid.uuid4().hex[:8])
-                if registry is not None
-                else None
+            append_chunks(
+                chunk_rows(route(rows_iter), bounds, routed=True),
+                lambda table: (DEFAULT_STREAM, -1),
+                # cache key = the table's full stream path (embeds the
+                # table, as the reference's writer map does); the append
+                # itself targets the table's bare ``_default`` stream
+                lambda table: pool.writer(default_stream_name(table)),
+                settings, metrics, registry, uuid.uuid4().hex[:8],
             )
-            for chunk in chunk_rows((r[0] for r in rows_iter), trigger):
-                write_with_retry(
-                    pool.writer(stream), table, stream, chunk, -1, settings,
-                    metrics=metrics, stream_metrics=sm,
-                )
-                if registry is not None:
-                    registry.publish(sm)
 
-        # Serialize JVM-side (codegen to_json, A17): Python tasks see one
-        # pre-serialized string per row instead of Row->dict->json.dumps.
-        _serialized_json(df).foreachPartition(write_partition)
+        lines.foreachPartition(write_partition)
 
     def start(self, stream_df: DataFrame, checkpoint_dir: str, **options):
         return _start_foreach_batch(
@@ -318,12 +400,7 @@ class DefaultStreamSink:
         )
 
 
-# ---------------------------------------------------------------------------
-# At-least-once: per-record multi-table routing
-# ---------------------------------------------------------------------------
-
-
-class MultiTableSink:
+class MultiTableSink(DefaultStreamSink):
     """At-least-once sink that routes EACH RECORD to its own table.
 
     The reference's records carry their destination: ``BigQueryRecord
@@ -336,17 +413,11 @@ class MultiTableSink:
     One stream fans into N tables inside a single ``foreachBatch``; no
     per-table query, no repartition.
 
-    Per partition task, rows stream once through a per-table open-envelope
-    map — the RowBatcher made incremental: each table it encounters gets
-    its own count/size-triggered batch, flushed through a ``WriterPool``
-    whose cache key is the table's full default-stream path
-    (``Rows.defaultStream`` naming), so writers fan out per table exactly
-    like the reference's per-subtask writer map (A9).  Memory per task is
-    bounded by (#tables seen by the task) x (one trigger-sized batch);
-    routing fan-out in practice is tens of tables, so no
-    ``sortWithinPartitions`` pass is spent making table runs contiguous.
-    Serialization is JVM-side ``to_json`` over the data columns (A17);
-    the routing column itself stays out of the payload.
+    The write body is :class:`DefaultStreamSink`'s; this class only names
+    the routing column.  Each table a partition task meets gets its own
+    trigger-sized open batch (``chunk_rows(routed=True)``) and its own
+    ``WriterPool`` entry, so writers fan out per table like the
+    reference's per-subtask writer map (A9).
     """
 
     def __init__(
@@ -358,71 +429,11 @@ class MultiTableSink:
         metrics=None,
         client_provider: ClientProvider | None = None,
     ):
-        self.backend_root = backend_root
+        super().__init__(
+            backend_root, None, settings, trigger, metrics,
+            client_provider=client_provider,
+        )
         self.table_col = table_col
-        self.settings = settings or WriterSettings()
-        self.trigger = trigger or BatchTriggerSettings()
-        self.metrics = metrics
-        self.client_provider = client_provider or FakeBigQueryClientProvider(
-            backend_root
-        )
-
-    def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from ..sources.fake_bigquery import default_stream_name
-
-        ensure_package_on_executors(df.sparkSession)
-        settings, trigger = self.settings, self.trigger
-        metrics = self.metrics
-        provider = self.client_provider
-        data_cols = [c for c in df.columns if c != self.table_col]
-        routed = df.select(
-            F.col(self.table_col).cast("string").alias("t"),
-            F.to_json(F.struct(*data_cols)).alias("j"),
-        )
-
-        def write_partition(rows_iter):
-            pool = WriterPool(
-                provider.client,
-                settings.streams_per_table,
-                settings.enable_connection_pool,
-            )
-            open_batches: dict[str, list[str]] = {}
-            open_bytes: dict[str, int] = {}
-
-            def flush(table: str) -> None:
-                chunk = open_batches.pop(table)
-                open_bytes.pop(table)
-                # cache key = full stream path (embeds the table, as the
-                # reference's writer map does); the append itself targets
-                # the table's bare ``_default`` stream
-                writer = pool.writer(default_stream_name(table))
-                write_with_retry(
-                    writer, table, DEFAULT_STREAM, chunk, -1, settings,
-                    metrics=metrics,
-                )
-
-            for table, payload in rows_iter:
-                batch = open_batches.setdefault(table, [])
-                batch.append(payload)
-                open_bytes[table] = (
-                    open_bytes.get(table, 0) + json_size_of(payload)
-                )
-                if (
-                    len(batch) >= trigger.max_count
-                    or open_bytes[table] >= trigger.max_bytes
-                ):
-                    flush(table)
-            for table in list(open_batches):
-                flush(table)
-
-        routed.foreachPartition(write_partition)
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str, **options):
-        return _start_foreach_batch(
-            self.write_batch, stream_df, checkpoint_dir, **options
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -440,15 +451,42 @@ class BufferedStreamSink:
     2. executors append partitions to deterministic streams
        ``b{batchId}-p{partitionId}`` at offset-checked positions — replay
        after a crash trims already-stored rows via ALREADY_EXISTS;
-    3. committables (stream, end_offset) return to the driver, which calls
-       ``flush_rows(end_offset - 1)`` (rows become visible) and then
-       atomically records the batchId.
+    3. committables (table, stream, end_offset) return to the driver,
+       which calls ``flush_rows(end_offset - 1)`` (rows become visible)
+       and then atomically records the batchId.
 
     A crash between 3's flush and the log write replays the batch: appends
     trim to no-ops, flush at the same offset is tolerated (ALREADY_EXISTS
     semantics of the reference committer), and the log is written — rows
     are visible exactly once.
+
+    The write body routes rows as ``(table, line)``; this sink is its
+    one-table case, :class:`MultiTableBufferedSink` adds the routing
+    column.  The one-table case has no trigger: a partition's lines chunk
+    only by the append byte budget, so a partition under the budget is ONE
+    append (per-row fixed costs dominate small appends).
+
+    SINK IDENTITY.  The commit log and the stream names are keyed by a
+    per-query ``sink_id`` that ``start()`` derives from the checkpoint
+    location: two queries sharing a backend root and a destination must
+    not share a log, or the second query's batch ids look
+    already-committed and its rows silently drop.  A checkpoint-derived
+    id is stable across restarts of the SAME query, which is exactly the
+    scope exactly-once replay needs.
+
+    UPGRADE / DIRECT-USE CONTRACT: a query that ran BEFORE sink ids
+    existed committed under the un-suffixed legacy log key; when
+    ``start()`` derives an id for a restart from a PRE-EXISTING
+    checkpoint, the legacy log's commit records (and partition-layout
+    manifests) are migrated into the new key first, so already-committed
+    batch ids still replay as no-ops instead of duplicating.  Callers
+    driving :meth:`write_batch` directly (no ``start()``, so no
+    checkpoint to derive from) MUST set ``sink_id`` whenever two sinks
+    can share a backend root and destination — without it they share the
+    legacy log key and inherit the cross-query batch-id collision.
     """
+
+    table_col: str | None = None  # routed subclasses name the column
 
     def __init__(
         self,
@@ -462,6 +500,8 @@ class BufferedStreamSink:
         self.backend_root = backend_root
         self.table = table
         self.settings = settings or WriterSettings()
+        self.trigger: BatchTriggerSettings | None = None
+        self.sink_id: str | None = None
         self.client_provider = client_provider or FakeBigQueryClientProvider(
             backend_root
         )
@@ -483,23 +523,31 @@ class BufferedStreamSink:
         return self._client
 
     # -- commit log --------------------------------------------------------
-    def _commit_path(self, batch_id: int) -> str:
-        import os
+    def _legacy_log_key(self) -> str:
+        if self.table_col is None:
+            return self.table
+        return f"__routed__{self.table_col}"
 
-        d = os.path.join(
-            self.backend_root, "commits", self.table.replace("/", "__")
-        )
+    @property
+    def log_key(self) -> str:
+        """The commit log's directory name: the legacy key, suffixed with
+        the sink id when there is one."""
+        base = self._legacy_log_key()
+        return f"{base}__{self.sink_id}" if self.sink_id else base
+
+    def _log_dir(self, key: str) -> str:
+        return os.path.join(self.backend_root, "commits", key.replace("/", "__"))
+
+    def _commit_path(self, batch_id: int) -> str:
+        d = self._log_dir(self.log_key)
         os.makedirs(d, exist_ok=True)
         return os.path.join(d, f"{batch_id}.json")
 
     def is_committed(self, batch_id: int) -> bool:
-        import os
-
         return os.path.exists(self._commit_path(batch_id))
 
     def _record_commit(self, batch_id: int, committables: list) -> None:
         import json
-        import os
 
         tmp = self._commit_path(batch_id) + ".tmp"
         with open(tmp, "w") as f:
@@ -520,7 +568,6 @@ class BufferedStreamSink:
         ``sink/buffered/BigQueryBufferedSinkWriter.java:118-148``).
         """
         import json
-        import os
 
         path = self._commit_path(batch_id) + ".manifest"
         if os.path.exists(path):
@@ -545,204 +592,55 @@ class BufferedStreamSink:
             return  # replay of a committed batch: exactly-once no-op
 
         ensure_package_on_executors(df.sparkSession)
-        table, settings = self.table, self.settings
+        settings = self.settings
+        bounds = _chunk_bounds(settings, self.trigger)
         metrics = self.metrics
         registry = self.stream_registry
         provider = self.client_provider
+        lines, route = _table_lines(df, self.table, self.table_col)
+        # the sink id reaches the STREAM names too: two queries hitting
+        # the same table with the same (batch, partition) ids would
+        # otherwise share a stream, and the second query's appends trim
+        # against the first query's durable rows into silent no-ops
+        prefix = f"s{self.sink_id}-" if self.sink_id else ""
 
         def write_partition(pid: int, rows_iter):
-            from .metrics import StreamMetrics
-
-            rows = [r[0] for r in rows_iter]
-            if not rows:
-                return iter(())
-            client = provider.client()
-            stream = client.create_write_stream(
-                table, "BUFFERED", name=f"{table}/streams/b{batch_id}-p{pid}"
-            )
-            sm = (
-                StreamMetrics(table, stream, str(pid))
-                if registry is not None
-                else None
-            )
-            # Replay-safe: the stream's current end is our base offset; on a
-            # clean first run it is 0, on replay the trim logic absorbs
-            # whatever is already durable.
-            write_with_retry(
-                client, table, stream, rows, 0, settings, metrics=metrics,
-                stream_metrics=sm,
-            )
-            end = client.get_write_stream(table, stream).offset
-            if registry is not None:
-                sm.offset = end  # post-trim truth from the backend
-                registry.publish(sm)
-            return iter([(stream, end)])
-
-        serialized = _serialized_json(df)
-        self._check_partitioning(batch_id, serialized.rdd.getNumPartitions())
-        committables = serialized.rdd.mapPartitionsWithIndex(write_partition).collect()
-        # Commit phase (driver = the committer operator): flush each stream
-        # to its end offset, then record the batch atomically.
-        for stream, end in committables:
-            self.client.flush_rows(self.table, stream, end - 1)
-        self._record_commit(batch_id, committables)
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str, **options):
-        return _start_foreach_batch(
-            self.write_batch, stream_df, checkpoint_dir, **options
-        )
-
-
-class MultiTableBufferedSink(BufferedStreamSink):
-    """Exactly-once 2PC with per-record table routing.
-
-    The reference's buffered writer is already per-envelope-table: every
-    append takes stream AND table from the ``Rows`` envelope
-    (``sink/buffered/BigQueryBufferedSinkWriter.java:53-58`` —
-    ``rows.getStream(), rows.getTable()``), so one exactly-once sink
-    serves any number of destination tables.  Spark analogue: the
-    destination is a column; each partition task groups its rows by
-    table and appends each group to its own deterministic BUFFERED
-    stream ``b{batchId}-p{partitionId}`` UNDER THAT TABLE, at
-    offset-checked positions.  The commit protocol is unchanged — one
-    commit log entry per batch covers every (table, stream) pair the
-    batch touched, so a batch becomes visible atomically across ALL its
-    destination tables (the reference's committer collects exactly such
-    per-table committables from ``prepareCommit``,
-    ``BigQueryBufferedSinkWriter.java:193-199``).
-
-    Replay safety is inherited: deterministic stream names per
-    (table, batch, partition), ALREADY_EXISTS trimming absorbs partial
-    first attempts, the partition-layout manifest pins the batch's
-    layout, and a committed batch id is a no-op.  The commit log is
-    keyed by the SINK IDENTITY — routing column PLUS a per-query
-    ``sink_id`` (derived from the checkpoint location at ``start()``
-    when not given explicitly): two independent queries sharing one
-    backend root must not share a log, or the second query's batch ids
-    would look already-committed and its rows silently drop.  A
-    checkpoint-derived id is stable across restarts of the SAME query,
-    which is exactly the scope exactly-once replay needs.
-
-    UPGRADE / DIRECT-USE CONTRACT: a query that ran BEFORE sink ids
-    existed committed under the legacy un-suffixed log key; when
-    ``start()`` derives an id for a restart from a PRE-EXISTING
-    checkpoint, the legacy log's commit records (and partition-layout
-    manifests) are migrated into the new key first, so already-committed
-    batch ids still replay as no-ops instead of duplicating into the
-    destination tables.  Callers driving :meth:`write_batch` directly
-    (no ``start()``, so no checkpoint to derive from) MUST pass
-    ``sink_id`` explicitly whenever two sinks can share a backend root —
-    without it they share the legacy log key and inherit exactly the
-    cross-query batch-id collision the discriminator exists to fix."""
-
-    def __init__(
-        self,
-        backend_root: str,
-        table_col: str,
-        settings: WriterSettings | None = None,
-        metrics=None,
-        trigger: BatchTriggerSettings | None = None,
-        sink_id: str | None = None,
-        client_provider: ClientProvider | None = None,
-    ):
-        self.table_col = table_col
-        self.sink_id = sink_id
-        super().__init__(
-            backend_root, table=self._log_key(), settings=settings,
-            metrics=metrics, client_provider=client_provider,
-        )
-        self.trigger = trigger or BatchTriggerSettings()
-
-    def _log_key(self) -> str:
-        base = f"__routed__{self.table_col}"
-        return f"{base}__{self.sink_id}" if self.sink_id else base
-
-    def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replay of a committed batch: exactly-once no-op
-
-        from pyspark.sql import functions as F
-
-        ensure_package_on_executors(df.sparkSession)
-        settings = self.settings
-        trigger = self.trigger
-        metrics = self.metrics
-        provider = self.client_provider
-        data_cols = [c for c in df.columns if c != self.table_col]
-        routed = df.select(
-            F.col(self.table_col).cast("string").alias("t"),
-            F.to_json(F.struct(*data_cols)).alias("j"),
-        )
-        # the sink discriminator must reach the STREAM names too: two
-        # queries hitting the same destination table with the same
-        # (batch, partition) ids would otherwise share a stream, and the
-        # second query's appends trim against the first query's durable
-        # rows into silent no-ops
-        stream_prefix = f"s{self.sink_id}-" if self.sink_id else ""
-
-        def write_partition(pid: int, rows_iter):
-            # Same memory shape as the at-least-once router: rows stream
-            # once through a per-table open-chunk map, flushed at trigger
-            # size — memory per task is (#tables seen) x (one
-            # trigger-sized chunk), NEVER the whole partition.  Chunks
-            # append at a RUNNING offset within the table's
+            # Rows stream once through the chunker: memory per task is
+            # (#tables seen) x (one chunk), never the whole partition.
+            # Chunks append at a running offset within each table's
             # per-(batch, partition) stream; chunk boundaries are
             # deterministic for a replayed partition (same rows, same
             # order — the layout manifest pins the partitioning), so
-            # ALREADY_EXISTS trimming still absorbs partial first
-            # attempts chunk by chunk.
+            # ALREADY_EXISTS trimming absorbs partial first attempts
+            # chunk by chunk.
             client = provider.client()
-            streams: dict[str, str] = {}
-            bases: dict[str, int] = {}
-            open_chunks: dict[str, list[str]] = {}
-            open_bytes: dict[str, int] = {}
-
-            def flush(table: str) -> None:
-                chunk = open_chunks.pop(table)
-                open_bytes.pop(table)
-                if table not in streams:
-                    streams[table] = client.create_write_stream(
+            streams = append_chunks(
+                chunk_rows(route(rows_iter), bounds, routed=True),
+                lambda table: (
+                    client.create_write_stream(
                         table, "BUFFERED",
-                        name=(
-                            f"{table}/streams/"
-                            f"{stream_prefix}b{batch_id}-p{pid}"
-                        ),
-                    )
-                    bases[table] = 0
-                write_with_retry(
-                    client, table, streams[table], chunk, bases[table],
-                    settings, metrics=metrics,
-                )
-                bases[table] += len(chunk)
+                        name=f"{table}/streams/{prefix}b{batch_id}-p{pid}",
+                    ),
+                    0,
+                ),
+                lambda table: client,
+                settings, metrics, registry, str(pid),
+            )
+            return ((t, stream, end) for t, (stream, end) in streams.items())
 
-            for t, j in rows_iter:
-                chunk = open_chunks.setdefault(t, [])
-                chunk.append(j)
-                open_bytes[t] = open_bytes.get(t, 0) + json_size_of(j)
-                if (
-                    len(chunk) >= trigger.max_count
-                    or open_bytes[t] >= trigger.max_bytes
-                ):
-                    flush(t)
-            for t in list(open_chunks):
-                flush(t)
-            out = []
-            for table, stream in streams.items():
-                end = client.get_write_stream(table, stream).offset
-                out.append((table, stream, end))
-            return iter(out)
-
-        self._check_partitioning(batch_id, routed.rdd.getNumPartitions())
-        committables = routed.rdd.mapPartitionsWithIndex(
+        self._check_partitioning(batch_id, lines.rdd.getNumPartitions())
+        committables = lines.rdd.mapPartitionsWithIndex(
             write_partition
         ).collect()
-        # commit phase: one flush per (table, stream), then ONE atomic
-        # batch record — the batch appears in every destination table
-        # together or (on replay after a crash here) idempotently again
+        # Commit phase (driver = the committer operator): one flush per
+        # (table, stream), then ONE atomic batch record — the batch
+        # appears in every destination table together or (on replay
+        # after a crash here) idempotently again
         for table, stream, end in committables:
             self.client.flush_rows(table, stream, end - 1)
         self._record_commit(batch_id, committables)
 
+    # -- sink identity -----------------------------------------------------
     def _migrate_legacy_log(self) -> None:
         """Copy legacy (pre-sink_id) commit records and partition-layout
         manifests under the new discriminated key.  Pre-upgrade, every
@@ -750,23 +648,17 @@ class MultiTableBufferedSink(BufferedStreamSink):
         its batch ids preserves pre-upgrade replay semantics exactly
         for old batches while new batches get the isolated log."""
         import glob
-        import os as _os
         import shutil
 
-        legacy = _os.path.join(
-            self.backend_root, "commits",
-            f"__routed__{self.table_col}".replace("/", "__"),
-        )
-        if not _os.path.isdir(legacy):
+        legacy = self._log_dir(self._legacy_log_key())
+        if not os.path.isdir(legacy):
             return
-        new_dir = _os.path.join(
-            self.backend_root, "commits", self.table.replace("/", "__")
-        )
-        _os.makedirs(new_dir, exist_ok=True)
+        new_dir = self._log_dir(self.log_key)
+        os.makedirs(new_dir, exist_ok=True)
         for pattern in ("*.json", "*.json.manifest"):
-            for src in glob.glob(_os.path.join(legacy, pattern)):
-                dst = _os.path.join(new_dir, _os.path.basename(src))
-                if not _os.path.exists(dst):
+            for src in glob.glob(os.path.join(legacy, pattern)):
+                dst = os.path.join(new_dir, os.path.basename(src))
+                if not os.path.exists(dst):
                     shutil.copy2(src, dst)
 
     def _adopt_checkpoint_identity(self, checkpoint_dir: str) -> None:
@@ -781,15 +673,13 @@ class MultiTableBufferedSink(BufferedStreamSink):
         belong to OTHER queries (the cross-query collision being
         fixed)."""
         import hashlib
-        import os as _os
 
-        pre_existing = _os.path.isdir(checkpoint_dir) and bool(
-            _os.listdir(checkpoint_dir)
+        pre_existing = os.path.isdir(checkpoint_dir) and bool(
+            os.listdir(checkpoint_dir)
         )
         self.sink_id = hashlib.md5(
-            _os.path.abspath(checkpoint_dir).encode()
+            os.path.abspath(checkpoint_dir).encode()
         ).hexdigest()[:12]
-        self.table = self._log_key()
         if pre_existing:
             self._migrate_legacy_log()
 
@@ -799,6 +689,48 @@ class MultiTableBufferedSink(BufferedStreamSink):
         return _start_foreach_batch(
             self.write_batch, stream_df, checkpoint_dir, **options
         )
+
+
+class MultiTableBufferedSink(BufferedStreamSink):
+    """Exactly-once 2PC with per-record table routing.
+
+    The reference's buffered writer is already per-envelope-table: every
+    append takes stream AND table from the ``Rows`` envelope
+    (``sink/buffered/BigQueryBufferedSinkWriter.java:53-58`` —
+    ``rows.getStream(), rows.getTable()``), so one exactly-once sink
+    serves any number of destination tables.  Spark analogue: the
+    destination is a column; each partition task appends each table's
+    rows to its own deterministic BUFFERED stream
+    ``b{batchId}-p{partitionId}`` UNDER THAT TABLE, in trigger-sized
+    chunks.  One commit log entry per batch covers every (table, stream)
+    pair the batch touched, so a batch becomes visible atomically across
+    ALL its destination tables (the reference's committer collects
+    exactly such per-table committables from ``prepareCommit``,
+    ``BigQueryBufferedSinkWriter.java:193-199``).
+
+    Everything else — the write body, replay safety, the sink identity
+    and the legacy-log migration — is :class:`BufferedStreamSink`'s; this
+    class names the routing column, keeps a trigger, and accepts an
+    explicit ``sink_id``.  Its legacy log key is
+    ``__routed__{table_col}``."""
+
+    def __init__(
+        self,
+        backend_root: str,
+        table_col: str,
+        settings: WriterSettings | None = None,
+        metrics=None,
+        trigger: BatchTriggerSettings | None = None,
+        sink_id: str | None = None,
+        client_provider: ClientProvider | None = None,
+    ):
+        super().__init__(
+            backend_root, None, settings, metrics,
+            client_provider=client_provider,
+        )
+        self.table_col = table_col
+        self.trigger = trigger or BatchTriggerSettings()
+        self.sink_id = sink_id
 
 
 # ---------------------------------------------------------------------------
@@ -909,8 +841,8 @@ class AsyncSink:
 
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
         ensure_package_on_executors(df.sparkSession)
-        table = self.table
-        settings, trigger = self.settings, self.trigger
+        table, settings = self.table, self.settings
+        bounds = _chunk_bounds(settings, self.trigger)
         max_inflight = self.max_inflight
         threads = max(1, settings.writer_threads)
         metrics = self.metrics
@@ -938,7 +870,7 @@ class AsyncSink:
                 lambda n: ThreadPoolExecutor(max_workers=n)
             )
             with make_pool(n_workers) as pool:
-                for chunk in chunk_rows((r[0] for r in rows_iter), trigger):
+                for chunk in chunk_rows((r[0] for r in rows_iter), bounds):
                     # inflight_wait_seconds (reference
                     # BigQuerySinkWriter.java:72-78): cumulative time this
                     # writer spent blocked on the in-flight quota.
@@ -975,7 +907,7 @@ class AsyncSink:
             if registry is not None:
                 registry.publish(sm)
 
-        _serialized_json(df).foreachPartition(write_partition)
+        df.select(json_line(df.columns)).foreachPartition(write_partition)
 
     def start(self, stream_df: DataFrame, checkpoint_dir: str, **options):
         return _start_foreach_batch(

@@ -534,3 +534,112 @@ def test_wildcard_write_rejected(spark, root):
     df = spark.createDataFrame([Row(id=1)], "id long")
     with pytest.raises(Exception, match="wildcard"):
         _write(df, root, "p/d/ev_*")
+
+
+# -- one JSON row form across writers ------------------------------------------
+
+
+def _stored_lines(root, table):
+    bq = FakeBigQuery(root)
+    lines = []
+    for stream in bq.list_streams(table):
+        data_path, _ = bq._stream_paths(table, stream)
+        with open(data_path) as f:
+            lines.extend(line.rstrip("\n") for line in f)
+    return lines
+
+
+def test_sink_and_dsv2_writer_store_identical_lossless_lines(
+    spark, root, tmp_path
+):
+    """The JVM ``to_json`` sinks and the Arrow DSv2 writer store ONE text
+    form per row: a microsecond TIMESTAMP as UTC with an explicit offset,
+    a TIMESTAMP_NTZ without one, and both keep all six fractional digits
+    through the write and the read-back."""
+    from datetime import date, datetime, timezone
+
+    from flink_big_query_connector_spark.streaming.config import WriterSettings
+    from flink_big_query_connector_spark.streaming.sinks import (
+        BufferedStreamSink,
+    )
+
+    schema = (
+        "ts timestamp, ntz timestamp_ntz, d date, n bigint, x double, "
+        "s string"
+    )
+    row = (
+        datetime(2026, 1, 1, 0, 0, 0, 123456, tzinfo=timezone.utc),
+        datetime(2026, 1, 1, 0, 0, 0, 123456),
+        date(2026, 1, 1),
+        7,
+        1.5,
+        "a",
+    )
+    df = spark.createDataFrame([row], schema)
+
+    sink_root = str(tmp_path / "sink")
+    BufferedStreamSink(
+        sink_root, "p/d/t", WriterSettings(retry_pause_s=0.0)
+    ).write_batch(df, 0)
+    _write(df, root, "p/d/t")
+
+    sink_lines = _stored_lines(sink_root, "p/d/t")
+    dsv2_lines = _stored_lines(root, "p/d/t")
+    assert sink_lines == dsv2_lines == [
+        '{"ts":"2026-01-01T00:00:00.123456+00:00",'
+        '"ntz":"2026-01-01T00:00:00.123456","d":"2026-01-01",'
+        '"n":7,"x":1.5,"s":"a"}'
+    ]
+    for r in (sink_root, root):
+        back = (
+            spark.read.format(dsrc.SOURCE_NAME).schema(schema)
+            .option("root", r).option("table", "p/d/t").load().collect()
+        )
+        assert back == df.collect()
+        assert back[0]["ts"].microsecond == 123456
+        assert back[0]["ntz"].microsecond == 123456
+
+
+def test_sink_written_struct_decimal_and_nan_read_back(spark, root):
+    """A BufferedStreamSink table with a struct (holding a microsecond
+    TIMESTAMP), a DECIMAL and a DOUBLE reads back equal.  With finite
+    doubles the split reader parses every column with Arrow, struct and
+    decimal included; a NaN — which ``to_json`` can only write quoted —
+    sends the split to the row path, which reads the same values."""
+    from datetime import datetime, timezone
+    from decimal import Decimal
+
+    from flink_big_query_connector_spark.streaming.sinks import (
+        BufferedStreamSink,
+    )
+
+    schema = (
+        "id bigint, st struct<a: bigint, t: timestamp>, "
+        "dec decimal(20,6), x double"
+    )
+    ts = datetime(2026, 1, 1, 0, 0, 0, 123456, tzinfo=timezone.utc)
+    rows = [
+        (1, (2, ts), Decimal("12345678901234.123456"), 1.5),
+        (2, None, None, None),
+        (3, (None, None), Decimal("-0.000001"), -2.25),
+    ]
+    nan_row = (4, (5, ts), Decimal("0"), float("nan"))
+    for table, extra in (("p/d/finite", []), ("p/d/nan", [nan_row])):
+        df = spark.createDataFrame(rows + extra, schema)
+        BufferedStreamSink(root, table).write_batch(df.coalesce(1), 0)
+        back = (
+            spark.read.format(dsrc.SOURCE_NAME).schema(schema)
+            .option("root", root).option("table", table).load()
+        )
+        assert back.count() == df.count()
+        assert back.exceptAll(df).count() == 0
+        assert df.exceptAll(back).count() == 0
+
+        bq = FakeBigQuery(root)
+        (stream,) = bq.list_streams(table)
+        split = dsrc._RangeSplit(
+            stream, 0, bq.get_write_stream(table, stream).flushed
+        )
+        out = list(dsrc._read_split(root, table, df.schema, [], split))
+        arrow = all(hasattr(item, "to_pylist") for item in out)
+        assert arrow == (not extra), table

@@ -156,7 +156,7 @@ def test_bq_schema_round_trip_preserves_structure(fields):
 
 
 # ---------------------------------------------------------------------------
-# connector serialization round-trip (Arrow fast path + row fallback)
+# connector serialization round-trip (DSv2 line form -> split reader)
 # ---------------------------------------------------------------------------
 
 import json
@@ -182,9 +182,9 @@ _RT_SCHEMA = StructType(
 
 
 def _roundtrip_rows(rows):
-    """Serialize like FakeBigQueryBatchWriter._chunks, append to the
-    backend, read back through FakeBigQueryReader.read (Arrow fast path
-    with automatic row fallback for NaN/Inf tokens)."""
+    """Serialize like the DSv2 writers, append to the backend, read back
+    through the connector's split reader (Arrow parse, row path for what
+    Arrow rejects)."""
     from flink_big_query_connector_spark.sources import bq_datasource as dsrc
     from flink_big_query_connector_spark.sources.fake_bigquery import (
         FakeBigQuery,
@@ -200,13 +200,9 @@ def _roundtrip_rows(rows):
             for r in rows
         ]
         bq.append(table, default_stream_name(table), payload, offset=-1)
-        reader = dsrc.FakeBigQueryReader.__new__(dsrc.FakeBigQueryReader)
-        reader.out_schema = _RT_SCHEMA
-        reader.root, reader.table = root, table
-        reader.only_visible, reader.filters = True, []
-        reader.session_tz = "UTC"
+        split = dsrc._RangeSplit(default_stream_name(table), 0, len(rows))
         out = []
-        for item in reader.read(dsrc._RangeSplit(default_stream_name(table), 0, len(rows))):
+        for item in dsrc._read_split(root, table, _RT_SCHEMA, [], split):
             if hasattr(item, "to_pylist"):
                 out.extend(
                     (d["id"], d["name"], d["score"]) for d in item.to_pylist()
@@ -245,9 +241,8 @@ def _same_value(a, b):
 )
 def test_connector_roundtrip_preserves_values(rows):
     """Every (int64, unicode text, double incl. NaN/±Inf, NULL) row
-    survives the JSON-lines write -> Arrow/row read bit-exactly.  NaN/Inf
-    exercise the automatic fallback from the C++ JSON parser (which
-    rejects bare NaN tokens) to the row path."""
+    survives the JSON-lines write -> Arrow read bit-exactly, including
+    the bare NaN/Infinity tokens ``json.dumps`` writes."""
     got = _roundtrip_rows(rows)
     assert len(got) == len(rows)
     for g, r in zip(got, rows):

@@ -783,7 +783,7 @@ def test_multi_table_buffered_sink_start_derives_sink_id_from_checkpoint(
     s2 = run(str(tmp_path / "ckpt2"))
     assert s1.sink_id is not None and s2.sink_id is not None
     assert s1.sink_id != s2.sink_id
-    assert s1.table != s2.table
+    assert s1.log_key != s2.log_key
     # same checkpoint -> same derived identity (restart scope)
     s1b = MultiTableBufferedSink(root, "dest", FAST)
     s1b.start(
@@ -828,7 +828,7 @@ def test_multi_table_buffered_sink_migrates_legacy_log_on_upgrade_restart(
     legacy = MultiTableBufferedSink(root, "dest", FAST)
     legacy.write_batch(ev, 0)
     legacy.write_batch(ev, 1)
-    assert legacy.table == "__routed__dest"
+    assert legacy.log_key == "__routed__dest"
 
     # post-upgrade restart from the query's existing checkpoint
     ckpt = tmp_path / "ckpt_upgrade"
@@ -836,10 +836,10 @@ def test_multi_table_buffered_sink_migrates_legacy_log_on_upgrade_restart(
     (ckpt / "metadata").write_text("{}")  # non-empty = pre-existing
     upgraded = MultiTableBufferedSink(root, "dest", FAST)
     upgraded._adopt_checkpoint_identity(str(ckpt))
-    assert upgraded.sink_id and upgraded.table != "__routed__dest"
+    assert upgraded.sink_id and upgraded.log_key != "__routed__dest"
     assert upgraded.is_committed(0) and upgraded.is_committed(1)
     # partition-layout manifests migrated too (replay pinning survives)
-    new_dir = os.path.join(root, "commits", upgraded.table)
+    new_dir = os.path.join(root, "commits", upgraded.log_key)
     assert any(f.endswith(".json.manifest") for f in os.listdir(new_dir))
     # replaying a migrated batch is a no-op, not a duplicate delivery
     before = {
@@ -919,3 +919,24 @@ def test_retry_backoff_jitter_schedule():
     assert j.backoff_jittered(2, 1.0) == j.backoff(2) * 0.5
     # cap still applies before jitter
     assert j.backoff_jittered(200, 0.0) == 60.0
+
+
+def test_buffered_sinks_on_one_table_keep_separate_commit_logs(
+    spark, tmp_path
+):
+    """Two exactly-once queries (different checkpoints) writing the SAME
+    table on one backend root are independent: each keys its commit log
+    and its stream names by its own checkpoint, so the second query's
+    batch 0 is not mistaken for the first query's and all rows land."""
+    root = str(tmp_path / "bq")
+    for q, first in (("a", 0), ("b", 10)):
+        src = str(tmp_path / f"src_{q}")
+        spark.range(first, first + 10).selectExpr("id AS v").coalesce(
+            1
+        ).write.parquet(src)
+        ev = spark.readStream.schema("v long").parquet(src)
+        BufferedStreamSink(root, "p.d.shared", FAST).start(
+            ev, str(tmp_path / f"ckpt_{q}"), available_now=True
+        ).awaitTermination()
+    got = sorted(r["v"] for r in FakeBigQuery(root).read_rows("p.d.shared"))
+    assert got == list(range(20))
