@@ -66,6 +66,36 @@ def default_shuffle_partitions(cpus: int | str) -> int:
         return 256
 
 
+_DAEMON_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "worker_daemon"
+)
+
+
+def _worker_daemon_conf() -> dict:
+    """``spark.python.daemon.module`` for ``worker_daemon/fbqc_daemon.py``,
+    which stops every Python task from re-reading ``pyspark.zip``'s
+    directory (its docstring has the measurement).
+
+    The daemon imports the module from the JVM's ``PYTHONPATH``, so the
+    directory goes into this process's environment before the JVM starts.
+    A JVM started earlier without it keeps the stock daemon: a daemon
+    module it cannot import would fail every Python task."""
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is None:
+        pp = os.environ.get("PYTHONPATH", "")
+        if _DAEMON_DIR not in pp.split(os.pathsep):
+            os.environ["PYTHONPATH"] = (
+                f"{pp}{os.pathsep}{_DAEMON_DIR}" if pp else _DAEMON_DIR
+            )
+        jvm_pp = os.environ["PYTHONPATH"]
+    else:
+        jvm_pp = SparkContext._jvm.java.lang.System.getenv("PYTHONPATH") or ""
+    if _DAEMON_DIR not in jvm_pp.split(os.pathsep):
+        return {}
+    return {"spark.python.daemon.module": "fbqc_daemon"}
+
+
 def get_spark(
     app_name: str = "flink-big-query-connector-spark",
     cpus: int | str | None = None,
@@ -118,7 +148,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -324,12 +324,11 @@ def _arrow_parse_type(dt):
 
 
 def _arrow_read_slice(
-    data_path: str, spark_schema: StructType, start: int, end: int
+    data: bytes, held: int, spark_schema: StructType, rows: slice
 ):
-    """Parse the JSON-lines stream file in C++, slice [start, end), and
-    cast to the table's Arrow schema.  A real backend would serve the range
-    directly (a Storage READ API stream); here planning is row-indexed so
-    the parse covers the file and the slice is zero-copy."""
+    """Parse a split's byte range — the JSON lines of the ``held`` rows
+    :meth:`FakeBigQuery.read_range` returned — in C++, slice the split's
+    ``rows`` out of it zero-copy, and cast to the table's Arrow schema."""
     import pyarrow as pa
     import pyarrow.json as pj
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -342,15 +341,27 @@ def _arrow_read_slice(
         explicit_schema=parse_schema, unexpected_field_behavior="ignore"
     )
     tbl = pj.read_json(
-        data_path,
+        pa.BufferReader(data),
         read_options=pj.ReadOptions(use_threads=False),
         parse_options=opts,
-    ).slice(start, end - start)
+    )
+    _check_held(tbl.num_rows, held)
+    tbl = tbl.slice(rows.start, rows.stop - rows.start)
     cols = [
         col if col.type.equals(f.type) else col.cast(f.type)  # ISO text
         for col, f in zip(tbl.columns, target)
     ]
     return pa.Table.from_arrays(cols, schema=target)
+
+
+def _check_held(parsed: int, held: int) -> None:
+    """A byte range must parse to the rows the append index says it holds;
+    any other count means the index and the data disagree."""
+    if parsed != held:
+        raise ValueError(
+            f"fakebigquery: split range parsed {parsed} rows where the "
+            f"stream index holds {held}"
+        )
 
 
 def _arrow_mask(f: "Filter", tbl):
@@ -469,7 +480,10 @@ class FakeBigQueryReader(DataSourceReader):
         sizes across every (suffix-pruned) table.
 
         Planning reads only stream METADATA (row counts), never data — the
-        driver-side cost is O(#streams) however large the tables are."""
+        driver-side cost is O(#streams) however large the tables are.  Each
+        split then reads only the appends holding its rows, so a scan
+        parses each stream once plus at most one append at each end of
+        every split, whatever the split count."""
         bq = FakeBigQuery(self.root)
         sizes: list[tuple[str, str, str, int]] = []
         for table, sfx in self._tables():
@@ -510,12 +524,13 @@ def _read_split(
     """Read one (stream, row-range) split — the split reader of batch and
     streaming reads alike.
 
-    Yields Arrow RecordBatches: parse the stream file with Arrow's C++
-    JSON-lines reader, slice the split's row range, evaluate the pushed
+    Fetch the byte range of the appends holding the split's rows
+    (:meth:`FakeBigQuery.read_range`), parse it with Arrow's C++
+    JSON-lines reader, slice the split's rows, evaluate the pushed
     ``filters`` with Arrow compute kernels, and stream the result to the
-    JVM as columnar Arrow — the Python-source analogue of the Storage READ
-    API's Arrow wire format.  Lines the Arrow parse rejects go through
-    :func:`_read_rows` instead."""
+    JVM as Arrow RecordBatches — the Python-source analogue of the Storage
+    READ API's Arrow wire format.  A range the Arrow parse rejects goes
+    through :func:`_read_rows` instead."""
     if split.end <= split.start:
         return
     # wildcard reads: parse the DATA fields, inject the per-split constant
@@ -524,18 +539,23 @@ def _read_split(
         [f for f in out_schema.fields if f.name != SUFFIX_COL]
     )
     has_suffix = len(data_schema.fields) != len(out_schema.fields)
-    data_path, _ = FakeBigQuery(root)._stream_paths(table, split.stream)
     if has_suffix and not data_schema.fields:
         # degenerate projection: ONLY the pseudo-column was selected
         yield from ((split.suffix,) for _ in range(split.end - split.start))
         return
     import pyarrow as pa
 
+    first_row, end_row, data = FakeBigQuery(root).read_range(
+        table, split.stream, split.start, split.end
+    )
+    held = end_row - first_row
+    rows = slice(split.start - first_row, split.end - first_row)
     try:
-        tbl = _arrow_read_slice(data_path, data_schema, split.start, split.end)
+        tbl = _arrow_read_slice(data, held, data_schema, rows)
     except (_ArrowFastPathUnsupported, pa.ArrowInvalid):
-        yield from _read_rows(data_path, out_schema, filters, split)
+        yield from _read_rows(data, held, rows, out_schema, filters, split.suffix)
         return
+    del data  # the parsed table holds its own copy; free the range
     for f in filters:
         tbl = tbl.filter(_arrow_mask(f, tbl))  # null mask rows drop (3VL)
     if has_suffix:
@@ -552,35 +572,36 @@ def _read_split(
 
 
 def _read_rows(
-    data_path: str,
+    data: bytes,
+    held: int,
+    rows: slice,
     out_schema: StructType,
     filters: List[Filter],
-    split: _RangeSplit,
+    suffix: str,
 ) -> Iterator[Tuple]:
-    """Row-at-a-time read of a split, for lines the Arrow parse cannot
-    take: column types without an Arrow parse form (maps, binary), and
-    non-finite doubles written as quoted strings.  ``to_json`` always
-    writes NaN and Infinity as ``"NaN"``/``"Infinity"`` — Spark 4.1 has no
-    write option that changes this — and Arrow's JSON parser rejects a
-    string in a double column, so a sink-written table holding one
-    non-finite double reads here.  (The DSv2 writers' ``json.dumps`` writes
-    them bare, which Arrow parses.)"""
+    """Row-at-a-time read of a split's byte range (the ``held`` rows
+    ``_read_split`` fetched; ``rows`` are the split's), for ranges the
+    Arrow parse cannot take: column types without an Arrow parse form
+    (maps, binary), and non-finite doubles written as quoted strings.
+    ``to_json`` always writes NaN and Infinity as ``"NaN"``/``"Infinity"``
+    — Spark 4.1 has no write option that changes this — and Arrow's JSON
+    parser rejects a string in a double column, so a sink-written range
+    holding one non-finite double reads here.  (The DSv2 writers'
+    ``json.dumps`` writes them bare, which Arrow parses.)"""
+    lines = data.decode("utf-8").split("\n")
+    lines.pop()  # the text after the last row's newline is empty
+    _check_held(len(lines), held)
     fields = out_schema.fields
-    with open(data_path) as f:
-        for i, line in enumerate(f):
-            if i < split.start:
-                continue
-            if i >= split.end:
-                break
-            raw = json.loads(line, parse_float=Decimal)
-            row = {
-                fld.name: split.suffix
-                if fld.name == SUFFIX_COL
-                else _coerce(raw.get(fld.name), fld.dataType)
-                for fld in fields
-            }
-            if all(_eval_filter(flt, row) for flt in filters):
-                yield tuple(row[fld.name] for fld in fields)
+    for line in lines[rows]:
+        raw = json.loads(line, parse_float=Decimal)
+        row = {
+            fld.name: suffix
+            if fld.name == SUFFIX_COL
+            else _coerce(raw.get(fld.name), fld.dataType)
+            for fld in fields
+        }
+        if all(_eval_filter(flt, row) for flt in filters):
+            yield tuple(row[fld.name] for fld in fields)
 
 
 # ---------------------------------------------------------------------------

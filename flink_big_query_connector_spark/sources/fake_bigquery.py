@@ -14,9 +14,20 @@ durability semantics across query restarts.
 
 Layout under ``root``::
 
-    tables/<table>/streams/<stream>.jsonl   # one JSON row per line
-    tables/<table>/streams/<stream>.meta    # {"type","offset","flushed","finalized"}
+    tables/<table>/streams/<stream>.jsonl   # one UTF-8 JSON row per line
+    tables/<table>/streams/<stream>.meta    # {"type","offset","flushed",
+                                            #  "finalized","bytes"}
+    tables/<table>/streams/<stream>.idx     # one (row_end, byte_end) record
+                                            # per append
     script.json                             # scripted failures / stream names
+
+``.meta`` is the commit point: ``offset`` rows in the first ``bytes`` bytes
+of ``.jsonl``.  An append truncates ``.jsonl`` to ``bytes`` before writing
+(dropping the tail of an append that died before its ``.meta`` write), and
+adds its ``.idx`` record only after ``.meta``, so a lost record merges two
+appends in :meth:`FakeBigQuery.read_range` and never misplaces one.  A
+stream written before ``.meta`` held ``bytes`` has it counted from its
+first ``offset`` lines and, with no ``.idx``, reads as one range.
 """
 
 from __future__ import annotations
@@ -24,9 +35,12 @@ from __future__ import annotations
 import fcntl
 import json
 import os
+import struct
 import uuid
+from bisect import bisect_left, bisect_right
 from contextlib import contextmanager
 from dataclasses import dataclass
+from itertools import islice
 
 from ..streaming.errors import (
     BigQueryError,
@@ -40,6 +54,10 @@ from ..streaming.errors import (
 
 DEFAULT_STREAM = "_default"
 MAX_APPEND_BYTES = 10_000_000
+# one .idx record: rows and data-file bytes at the end of an append (a
+# format string, not a struct.Struct: this module is pickled by value)
+_INDEX_RECORD = "<QQ"
+_INDEX_RECORD_SIZE = struct.calcsize(_INDEX_RECORD)
 
 
 def default_stream_name(table: str) -> str:
@@ -85,11 +103,17 @@ class FakeBigQuery:
     def _table_dir(self, table: str) -> str:
         return os.path.join(self.root, "tables", table.replace("/", "__"))
 
-    def _stream_paths(self, table: str, stream: str) -> tuple[str, str]:
-        base = os.path.join(
+    def _stream_base(self, table: str, stream: str) -> str:
+        return os.path.join(
             self._table_dir(table), "streams", stream.replace("/", "__")
         )
+
+    def _stream_paths(self, table: str, stream: str) -> tuple[str, str]:
+        base = self._stream_base(table, stream)
         return base + ".jsonl", base + ".meta"
+
+    def _index_path(self, table: str, stream: str) -> str:
+        return self._stream_base(table, stream) + ".idx"
 
     def _lock_path(self, table: str, stream: str) -> str:
         return self._stream_paths(table, stream)[0] + ".lock"
@@ -173,7 +197,7 @@ class FakeBigQuery:
                 self._write_meta(
                     meta,
                     {"type": stream_type, "offset": 0, "flushed": 0,
-                     "finalized": False, "table": table},
+                     "finalized": False, "table": table, "bytes": 0},
                 )
 
     def get_write_stream(self, table: str, stream: str) -> StreamInfo:
@@ -197,6 +221,16 @@ class FakeBigQuery:
     def _read_meta(path: str) -> dict:
         with open(path) as f:
             return json.load(f)
+
+    @staticmethod
+    def _committed_bytes(data_path: str, meta: dict) -> int:
+        """The byte length of a stream's committed rows.  A ``.meta``
+        written before it recorded ``bytes`` has it counted from the first
+        ``offset`` lines of the data file, which skips any uncommitted tail."""
+        if "bytes" in meta:
+            return meta["bytes"]
+        with open(data_path, "rb") as f:
+            return sum(len(line) for line in islice(f, meta["offset"]))
 
     @staticmethod
     def _write_meta(path: str, meta: dict) -> None:
@@ -254,13 +288,20 @@ class FakeBigQuery:
                     raise OffsetAlreadyExistsError(offset, current)
                 if offset > current:
                     raise OffsetOutOfRangeError(offset, current)
-            with open(data, "a") as f:
+            os.truncate(data, self._committed_bytes(data, m))
+            with open(data, "a", encoding="utf-8", newline="\n") as f:
                 for p in payload:
                     f.write(p + "\n")
+                m["bytes"] = f.tell()  # a byte position: UTF-8 is stateless
             m["offset"] = current + len(rows)
             if m["type"] == "DEFAULT":
                 m["flushed"] = m["offset"]  # default streams are immediately visible
             self._write_meta(meta, m)
+            with open(self._index_path(table, stream), "ab") as f:
+                end = f.seek(0, os.SEEK_END)
+                # drop a record a crash tore, which would shift every later one
+                f.truncate(end - end % _INDEX_RECORD_SIZE)
+                f.write(struct.pack(_INDEX_RECORD, m["offset"], m["bytes"]))
             return m["offset"]
 
     @staticmethod
@@ -289,6 +330,38 @@ class FakeBigQuery:
             self._write_meta(meta, m)
             return m["flushed"]
 
+    # -- range reads (the Storage READ API side of a split) ------------------
+    def read_range(
+        self, table: str, stream: str, start: int, end: int
+    ) -> tuple[int, int, bytes]:
+        """The committed JSON lines of the appends holding rows
+        ``[start, end)``, as ``(first_row, end_row, data)``: ``data`` holds
+        rows ``first_row..end_row`` and runs from the last append boundary
+        at or before ``start`` to the first at or after ``end``.  A stream
+        without index records reads as one range from byte 0."""
+        try:
+            with open(self._index_path(table, stream), "rb") as f:
+                raw = f.read()
+        except FileNotFoundError:
+            raw = b""
+        raw = raw[: len(raw) - len(raw) % _INDEX_RECORD_SIZE]
+        # .meta after .idx: every record read then lies within the commit
+        data, meta = self._stream_paths(table, stream)
+        m = self._read_meta(meta)
+        if end > m["offset"]:
+            raise OffsetOutOfRangeError(end, m["offset"])
+        bounds = [
+            (0, 0),
+            *struct.iter_unpack(_INDEX_RECORD, raw),
+            (m["offset"], self._committed_bytes(data, m)),
+        ]
+        row_ends = [r for r, _ in bounds]
+        first_row, first_byte = bounds[bisect_right(row_ends, start) - 1]
+        end_row, end_byte = bounds[bisect_left(row_ends, end)]
+        with open(data, "rb") as f:
+            f.seek(first_byte)
+            return first_row, end_row, f.read(end_byte - first_byte)
+
     # -- reads (for assertions / the sink-table oracle) ---------------------
     def read_rows(self, table: str, only_visible: bool = True) -> list[dict]:
         """All rows in the table across streams (visible rows only by default)."""
@@ -302,7 +375,7 @@ class FakeBigQuery:
             meta = self._read_meta(os.path.join(streams_dir, fn))
             data_path = os.path.join(streams_dir, fn[:-5] + ".jsonl")
             limit = meta["flushed"] if only_visible else meta["offset"]
-            with open(data_path) as f:
+            with open(data_path, encoding="utf-8") as f:
                 for i, line in enumerate(f):
                     if i >= limit:
                         break

@@ -643,3 +643,138 @@ def test_sink_written_struct_decimal_and_nan_read_back(spark, root):
         out = list(dsrc._read_split(root, table, df.schema, [], split))
         arrow = all(hasattr(item, "to_pylist") for item in out)
         assert arrow == (not extra), table
+
+        split3 = (
+            spark.read.format(dsrc.SOURCE_NAME).schema(schema)
+            .option("root", root).option("table", table)
+            .option("partitions", 3).load()
+        )
+        assert split3.exceptAll(df).count() == 0
+        assert df.exceptAll(split3).count() == 0
+
+
+# -- byte-ranged split reads ---------------------------------------------------
+
+
+def _write_appends(df, root, table, batch_rows):
+    """Load ``df`` through the DSv2 writer in appends of ``batch_rows``."""
+    df.write.format(dsrc.SOURCE_NAME).option("root", root).option(
+        "table", table
+    ).option("batch_rows", str(batch_rows)).mode("append").save()
+
+
+def test_split_reads_parse_only_the_appends_holding_their_rows(
+    spark, root, monkeypatch
+):
+    """A 16-split scan of one 12-append stream parses at most one extra
+    append at each end of a split, not the whole stream per split; and a
+    split stays on the Arrow path when an append outside its range is
+    junk."""
+    import pyarrow as pa
+    import pyarrow.json as pj
+
+    n, batch = 240, 20
+    _write_appends(_sample_df(spark, n).coalesce(1), root, "p/d/t", batch)
+    reader = dsrc.FakeBigQueryReader(
+        SCHEMA, {"root": root, "table": "p/d/t", "partitions": "16"}
+    )
+    splits = reader.partitions()
+    assert len(splits) == 16
+
+    parsed = []
+    read_json = pj.read_json
+
+    def counting_read_json(*args, **kwargs):
+        tbl = read_json(*args, **kwargs)
+        parsed.append(tbl.num_rows)
+        return tbl
+
+    monkeypatch.setattr(pj, "read_json", counting_read_json)
+    out = [b for split in splits for b in reader.read(split)]
+    assert sorted(r["id"] for b in out for r in b.to_pylist()) == list(range(n))
+    assert sum(parsed) <= n + 2 * len(splits) * batch
+
+    bq = FakeBigQuery(root)
+    (stream,) = bq.list_streams("p/d/t")
+    data_path, _ = bq._stream_paths("p/d/t", stream)
+    with open(data_path, "r+b") as f:  # junk over row 0, same length
+        first = f.readline()
+        f.seek(0)
+        f.write(b"#" * (len(first) - 1))
+    last = splits[-1]
+    assert last.start >= batch
+    out = list(reader.read(last))
+    assert out and all(isinstance(b, pa.RecordBatch) for b in out)
+    assert sum(b.num_rows for b in out) == last.end - last.start
+
+
+def test_split_reads_invariant_in_split_count(spark, root):
+    """A multi-append table of non-ASCII strings (byte offsets differ from
+    character offsets) reads identically through a pushed filter at 1, 3
+    and 16 splits and as a wildcard read."""
+    words = ["żółw", "日本語", "emoji 🚀", "plain"]
+    df = spark.createDataFrame(
+        [Row(id=i, name=f"{words[i % 4]}_{i}", score=i / 4) for i in range(200)],
+        SCHEMA,
+    )
+    _write_appends(df.repartition(3), root, "p/d/uni_a", 15)
+    keep = (F.col("score") > 12.3) & F.col("name").startswith("日")
+    want = sorted(df.filter(keep).collect())
+    assert want
+    for parts in (1, 3, 16):
+        got = _read(spark, root, "p/d/uni_a", partitions=parts).filter(keep)
+        assert sorted(got.collect()) == want, parts
+    wild = _read(spark, root, "p/d/uni_*", partitions=16).filter(keep)
+    assert sorted(wild.drop(dsrc.SUFFIX_COL).collect()) == want
+
+
+def test_buffered_stream_flushed_mid_append_reads_flushed_prefix(spark, root):
+    """Rows past the flush point in a flushed append stay invisible at
+    every split count; ``only_visible=false`` reads the whole stream."""
+    table = "p/d/buf"
+    dsrc._save_schema(root, table, SCHEMA)
+    bq = FakeBigQuery(root)
+    s = bq.create_write_stream(table, "BUFFERED")
+    for k in range(3):
+        bq.append(table, s, [
+            {"id": 10 * k + i, "name": "ü", "score": 0.5} for i in range(10)
+        ], 10 * k)
+    bq.flush_rows(table, s, 16)
+    for parts in (1, 3, 16):
+        got = _read(spark, root, table, partitions=parts).collect()
+        assert sorted(r.id for r in got) == list(range(17)), parts
+    every = _read(spark, root, table, partitions=3, only_visible="false")
+    assert sorted(r.id for r in every.collect()) == list(range(30))
+
+
+def test_stream_read_batches_starting_mid_append_read_each_row_once(
+    spark, root, tmp_path
+):
+    """Micro-batches of 25 rows over appends of 10, split into partitions
+    of 7 rows, start and end inside appends; every row arrives once."""
+    _write_appends(_sample_df(spark, 100).coalesce(1), root, "p/d/t", 10)
+    stream = (
+        spark.readStream.format(dsrc.SOURCE_NAME)
+        .option("root", root)
+        .option("table", "p/d/t")
+        .option("max_rows_per_trigger", "25")
+        .option("stream_rows_per_partition", "7")
+        .load()
+    )
+    name = "dsv2_mid_append_batches"
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        got = sorted(r.id for r in spark.table(name).collect())
+        assert got == list(range(100))
+        batch_rows = [
+            p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0
+        ]
+        assert batch_rows and max(batch_rows) <= 25
+    finally:
+        q.stop()
