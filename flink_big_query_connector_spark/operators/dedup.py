@@ -25,6 +25,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..cache import scoped_persist
 from ..functions.vectors import cosine_similarity_expr
@@ -1044,6 +1045,12 @@ def connected_components(
       shrinks toward one row per node.
     - **Final level** (``repartition(1)`` + the same pass): one task
       union-finds the funneled star set and emits the global labels.
+      It runs at every parallelism, one slot included: level 1 runs
+      over every partition of ``pairs_df``, so its stars need a global
+      merge even when the session has no merge levels.
+
+    The id columns must be integral; any other type raises ``TypeError``
+    (a cast would turn a misused string id into NULL).
 
     Exactness (this is NOT an approximation — no fixpoint, no
     convergence check needed): (1) within any subset of edges,
@@ -1073,6 +1080,13 @@ def connected_components(
     output is ``scoped_persist``-ed: consumers (soft weights, survivor
     selection) reference it from 2+ plan branches, and the old shape
     materialized via localCheckpoint anyway."""
+    for c in (a_col, b_col):
+        t = pairs_df.schema[c].dataType
+        if not isinstance(t, T.IntegralType):
+            raise TypeError(
+                f"connected_components: id column {c!r} must be integral, "
+                f"got {t.simpleString()}"
+            )
     edges = pairs_df.select(
         F.col(a_col).cast("long").alias("u"),
         F.col(b_col).cast("long").alias("v"),
@@ -1082,14 +1096,14 @@ def connected_components(
     # Merge-level count is derived from the session's parallelism (a
     # plan-time constant — probing the actual partition count would
     # compile the upstream plan twice), so the funnel deepens with the
-    # cluster, not with a constant tuned for local mode.
+    # cluster, not with a constant tuned for local mode.  The single-task
+    # pass always runs: level 1 covers every partition of ``pairs_df``,
+    # however small the session's parallelism.
     n = pairs_df.sparkSession.sparkContext.defaultParallelism
-    while n > 1:
-        n = 1 if n <= CC_MERGE_FAN else (n + CC_MERGE_FAN - 1) // CC_MERGE_FAN
-        if n == 1:
-            out = out.repartition(1).mapInPandas(stars, "u long, v long")
-        else:
-            out = out.repartition(n, "u").mapInPandas(stars, "u long, v long")
+    while n > CC_MERGE_FAN:
+        n = (n + CC_MERGE_FAN - 1) // CC_MERGE_FAN
+        out = out.repartition(n, "u").mapInPandas(stars, "u long, v long")
+    out = out.repartition(1).mapInPandas(stars, "u long, v long")
     return scoped_persist(
         out.select(
             F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")

@@ -1,8 +1,14 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, and what every
+session needs before the package's Python code runs on workers.
 
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the same configuration
 knobs (AQE, shuffle partitions, Arrow) are what we would set on a real
 1000-executor cluster — only the numbers change.
+
+The worker start-up hook (:func:`add_worker_hook`) reaches sessions the
+caller builds as well as ``get_spark``'s: ``tune_session`` and
+:func:`ensure_package_on_executors` (which ``register()`` and every sink
+call) add it too.
 """
 
 from __future__ import annotations
@@ -15,9 +21,30 @@ from pyspark.sql import SparkSession
 
 _SHIPPED_SESSIONS: set[int] = set()
 
+_HOOK_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker_daemon")
+
+
+def add_worker_hook(sc) -> None:
+    """Put ``worker_daemon/`` first on the ``PYTHONPATH`` of this
+    SparkContext's Python functions, so that Python's ``site`` imports
+    ``worker_daemon/sitecustomize.py`` in every Python process Spark starts
+    for them: task workers, their daemon and the DataSource planner
+    workers.  That file stops each task and planning call from re-reading
+    ``pyspark.zip`` (its docstring has the measurement).
+
+    A function reads ``sc.environment`` when it is built, so this runs
+    before ``register()`` builds the DataSource's.  Idempotent.  On a
+    cluster whose executors lack this path the entry is skipped."""
+    pp = sc.environment.get("PYTHONPATH", "")
+    if _HOOK_DIR not in pp.split(os.pathsep):
+        sc.environment["PYTHONPATH"] = os.pathsep.join(
+            p for p in (_HOOK_DIR, pp) if p
+        )
+
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
-    """Ship this package to executor Python workers via ``addPyFile``.
+    """Ship this package to executor Python workers via ``addPyFile`` and
+    add the worker start-up hook (:func:`add_worker_hook`).
 
     Executor workers are separate processes that do not inherit the
     driver's ``sys.path`` edits; any closure that references this package
@@ -25,6 +52,7 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     Idempotent per SparkContext.
     """
     sc = spark.sparkContext
+    add_worker_hook(sc)
     key = id(sc)
     if key in _SHIPPED_SESSIONS:
         return
@@ -64,36 +92,6 @@ def default_shuffle_partitions(cpus: int | str) -> int:
         return 8 * int(cpus)
     except (TypeError, ValueError):  # cpus="*" etc.
         return 256
-
-
-_DAEMON_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "worker_daemon"
-)
-
-
-def _worker_daemon_conf() -> dict:
-    """``spark.python.daemon.module`` for ``worker_daemon/fbqc_daemon.py``,
-    which stops every Python task from re-reading ``pyspark.zip``'s
-    directory (its docstring has the measurement).
-
-    The daemon imports the module from the JVM's ``PYTHONPATH``, so the
-    directory goes into this process's environment before the JVM starts.
-    A JVM started earlier without it keeps the stock daemon: a daemon
-    module it cannot import would fail every Python task."""
-    from pyspark import SparkContext
-
-    if SparkContext._gateway is None:
-        pp = os.environ.get("PYTHONPATH", "")
-        if _DAEMON_DIR not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                f"{pp}{os.pathsep}{_DAEMON_DIR}" if pp else _DAEMON_DIR
-            )
-        jvm_pp = os.environ["PYTHONPATH"]
-    else:
-        jvm_pp = SparkContext._jvm.java.lang.System.getenv("PYTHONPATH") or ""
-    if _DAEMON_DIR not in jvm_pp.split(os.pathsep):
-        return {}
-    return {"spark.python.daemon.module": "fbqc_daemon"}
 
 
 def get_spark(
@@ -148,9 +146,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
-    for k, v in {**_worker_daemon_conf(), **(extra_conf or {})}.items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    add_worker_hook(spark.sparkContext)
+    return spark
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
@@ -158,8 +158,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The correctness driver hands us its own SparkSession; timezone must be
     pinned to UTC for oracle comparison and Arrow should be on.  Only
-    runtime-mutable keys are touched here.
+    runtime-mutable keys are touched here, plus the worker start-up hook
+    (:func:`add_worker_hook`).
     """
+    add_worker_hook(spark.sparkContext)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     for k, v in (
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from flink_big_query_connector_spark.operators.dedup import connected_components
 
 
@@ -119,3 +121,28 @@ def test_lsh_neardup_pairs_subset_of_exact_with_recall(spark):
         hi_found = {p for p in lsh if p[2] >= 0.7}
         assert len(hi_found) >= 0.5 * len(hi_exact), (
             len(hi_found), len(hi_exact))
+
+
+def test_single_slot_session_merges_across_partitions(spark, monkeypatch):
+    """At ``defaultParallelism == 1`` there are no merge levels, but level
+    1 still runs per input partition: the single-task pass must fuse a
+    chain whose edges sit in different partitions."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 1)
+    )
+    edges = [(i, i + 1) for i in range(8)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(4)
+    assert df.rdd.getNumPartitions() >= 2
+    got = {r.doc_id: r.cluster_id for r in connected_components(df).collect()}
+    assert got == {i: 0 for i in range(9)}
+
+
+def test_non_integral_ids_raise(spark):
+    df = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
+    with pytest.raises(TypeError, match="integral"):
+        connected_components(df)
+    ints = spark.createDataFrame([(1, 2)], "id_a int, id_b short")
+    got = {r.doc_id: r.cluster_id for r in connected_components(ints).collect()}
+    assert got == {1: 1, 2: 1}
