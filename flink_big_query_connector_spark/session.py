@@ -5,70 +5,90 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the same configuration
 knobs (AQE, shuffle partitions, Arrow) are what we would set on a real
 1000-executor cluster — only the numbers change.
 
-The worker start-up hook (:func:`add_worker_hook`) reaches sessions the
-caller builds as well as ``get_spark``'s: ``tune_session`` and
-:func:`ensure_package_on_executors` (which ``register()`` and every sink
-call) add it too.
+Every Python process Spark starts for a session's functions imports this
+package by reference from the driver's source tree: :func:`add_worker_hook`
+puts the package's parent directory (and the worker start-up hook) on the
+``PYTHONPATH`` Spark hands those processes.  ``get_spark``,
+``tune_session`` and :func:`ensure_package_on_executors` (which
+``register()`` and every sink call) add it, so sessions the caller builds
+get it too.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
-_SHIPPED_SESSIONS: set[int] = set()
-
-_HOOK_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker_daemon")
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+_HOOK_DIR = os.path.join(_PKG_DIR, "worker_daemon")
 
 
 def add_worker_hook(sc) -> None:
-    """Put ``worker_daemon/`` first on the ``PYTHONPATH`` of this
-    SparkContext's Python functions, so that Python's ``site`` imports
-    ``worker_daemon/sitecustomize.py`` in every Python process Spark starts
-    for them: task workers, their daemon and the DataSource planner
-    workers.  That file stops each task and planning call from re-reading
-    ``pyspark.zip`` (its docstring has the measurement).
+    """Put ``worker_daemon/`` first and the package's parent directory
+    last on the ``PYTHONPATH`` of this SparkContext's Python functions.
+    Spark merges that path into every Python process it starts for them:
+    task workers, their daemon, the DataSource planner workers and the
+    streaming source runner.
 
-    A function reads ``sc.environment`` when it is built, so this runs
-    before ``register()`` builds the DataSource's.  Idempotent.  On a
-    cluster whose executors lack this path the entry is skipped."""
+    - Python's ``site`` imports ``worker_daemon/sitecustomize.py`` in each
+      of them, which stops each task and planning call from re-reading
+      ``pyspark.zip`` (its docstring has the measurement).
+    - The parent directory makes the package importable there, so its
+      objects pickle by reference.  It goes after the existing entries and
+      shadows nothing.
+
+    A Python function reads ``sc.environment`` when it is wrapped, so a
+    UDF or DataSource built before this runs (before ``register()`` or
+    ``tune_session`` on a caller-built session) gets neither entry: it
+    re-reads ``pyspark.zip`` per call and finds the package only through
+    its worker's working directory.  Idempotent.  On a cluster whose
+    executors lack these paths the entries are skipped."""
     pp = sc.environment.get("PYTHONPATH", "")
-    if _HOOK_DIR not in pp.split(os.pathsep):
-        sc.environment["PYTHONPATH"] = os.pathsep.join(
-            p for p in (_HOOK_DIR, pp) if p
-        )
+    parts = pp.split(os.pathsep) if pp else []
+    if _HOOK_DIR not in parts:
+        parts.insert(0, _HOOK_DIR)
+    parent = os.path.dirname(_PKG_DIR)
+    if parent not in parts:
+        parts.append(parent)
+    sc.environment["PYTHONPATH"] = os.pathsep.join(parts)
 
 
-def ensure_package_on_executors(spark: SparkSession) -> None:
-    """Ship this package to executor Python workers via ``addPyFile`` and
-    add the worker start-up hook (:func:`add_worker_hook`).
-
-    Executor workers are separate processes that do not inherit the
-    driver's ``sys.path`` edits; any closure that references this package
-    (foreachPartition writers, pandas UDFs) needs the package distributed.
-    Idempotent per SparkContext.
-    """
-    sc = spark.sparkContext
-    add_worker_hook(sc)
-    key = id(sc)
-    if key in _SHIPPED_SESSIONS:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
+@functools.cache
+def _package_zip() -> str:
+    """The package's ``.py`` files in one temp zip, built once per process
+    and removed when the interpreter exits."""
     fd, zip_path = tempfile.mkstemp(suffix=".zip", prefix="fbqc_pkg_")
     os.close(fd)
+    atexit.register(os.remove, zip_path)
+    pkg_name = os.path.basename(_PKG_DIR)
     with zipfile.ZipFile(zip_path, "w") as zf:
-        for base, _dirs, files in os.walk(pkg_dir):
+        for base, _dirs, files in os.walk(_PKG_DIR):
             for fn in files:
                 if fn.endswith(".py"):
                     full = os.path.join(base, fn)
-                    rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
+                    rel = os.path.join(pkg_name, os.path.relpath(full, _PKG_DIR))
                     zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    _SHIPPED_SESSIONS.add(key)
+    return zip_path
+
+
+def ensure_package_on_executors(spark: SparkSession) -> None:
+    """Make this package importable in the session's Python workers: add
+    :func:`add_worker_hook`, and on a non-local master also ship the
+    package with ``addPyFile``, since executors on other hosts may lack the
+    driver's path.  A ``local*`` master needs no zip: its workers run on
+    the driver's host.  Idempotent per SparkContext."""
+    sc = spark.sparkContext
+    add_worker_hook(sc)
+    if sc.master.startswith("local"):
+        return
+    zip_path = _package_zip()
+    if os.path.basename(zip_path) not in sc._python_includes:
+        sc.addPyFile(zip_path)
 
 
 def default_shuffle_partitions(cpus: int | str) -> int:

@@ -36,7 +36,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import sys
 import uuid
 from dataclasses import dataclass
 from datetime import date, datetime, timezone
@@ -983,38 +982,11 @@ class FakeBigQueryDataSource(DataSource):
 def register(spark) -> None:
     """Register the source for this session (idempotent).
 
-    Two delivery paths, because two kinds of Python workers deserialize the
-    DataSource:
+    Every Python process that unpickles the DataSource — planner workers,
+    task workers and the driver-side streaming source runner — imports
+    this package by reference through the path
+    ``session.ensure_package_on_executors`` adds."""
+    from ..session import ensure_package_on_executors
 
-    - executor data workers get the package via ``addPyFile``;
-    - the driver-side *streaming source planning runner*
-      (``python_streaming_source_runner.py``) is a separate process that
-      does NOT see pyFiles — so the connector's module closure is marked
-      pickle-by-value, making the pickled DataSource self-contained and
-      importable-from-nowhere."""
-    from pyspark import cloudpickle
-
-    from .. import session as _session
-    from ..streaming import batching as _batching
-    from ..streaming import client_provider as _cprov
-    from ..streaming import config as _config
-    from ..streaming import errors as _errors
-    from ..streaming import sinks as _sinks
-    from . import fake_bigquery as _fbq
-
-    _session.ensure_package_on_executors(spark)
-    # One consistent pickle graph: every module whose classes cross the
-    # worker boundary is by-value, so e.g. the BigQueryError raised by the
-    # unpickled FakeBigQuery IS the class write_with_retry catches.
-    # client_provider MUST ride along: the sinks' writer factories are
-    # provider objects from that module, and a by-reference provider
-    # would hand workers the REAL FakeBigQuery whose exception classes
-    # the by-value write_with_retry cannot catch (the round-11 ordering
-    # bug: any test registering this DataSource made later sink replay
-    # tests' ALREADY_EXISTS trims miss on class identity).
-    for mod in (
-        _errors, _batching, _config, _sinks, _fbq, _cprov,
-        sys.modules[__name__],
-    ):
-        cloudpickle.register_pickle_by_value(mod)
+    ensure_package_on_executors(spark)
     spark.dataSource.register(FakeBigQueryDataSource)

@@ -54,8 +54,7 @@ from ..streaming.errors import (
 
 DEFAULT_STREAM = "_default"
 MAX_APPEND_BYTES = 10_000_000
-# one .idx record: rows and data-file bytes at the end of an append (a
-# format string, not a struct.Struct: this module is pickled by value)
+# one .idx record: rows and data-file bytes at the end of an append
 _INDEX_RECORD = "<QQ"
 _INDEX_RECORD_SIZE = struct.calcsize(_INDEX_RECORD)
 

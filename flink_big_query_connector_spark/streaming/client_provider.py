@@ -44,15 +44,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Protocol, runtime_checkable
 
-# Module-level import ON PURPOSE (not lazy inside client()): once
-# sources.bq_datasource registers this package's modules for cloudpickle
-# BY-VALUE pickling, a lazy in-method import would resolve the REAL
-# fake_bigquery module inside the executor worker while write_with_retry
-# (shipped by value) catches the BY-VALUE exception classes — the raised
-# OffsetAlreadyExistsError would sail past its own trim handler on class
-# identity.  A module-global reference keeps FakeBigQuery inside the one
-# consistent pickle graph (this module is itself in the by-value set;
-# see bq_datasource.register_bq_datasource).
 from ..sources.fake_bigquery import FakeBigQuery
 from .errors import (
     BigQueryError,

@@ -156,23 +156,29 @@ def test_google_provider_fails_fast_without_package():
     assert "seam" in str(exc.value) or "adapter" in str(exc.value)
 
 
-def test_provider_module_is_in_datasource_by_value_pickle_set(spark):
-    """Ordering-bug pin (round 11): registering the DataSource flips the
-    sink/error/backend modules to cloudpickle BY-VALUE pickling; the
-    provider module must flip WITH them, or executor workers unpickle a
-    by-reference provider whose real FakeBigQuery raises exception
-    classes the by-value write_with_retry cannot catch — ALREADY_EXISTS
-    replay trims then fail any sink test that runs after any DataSource
-    test in the same process."""
+def test_datasource_objects_pickle_by_reference_after_register(spark):
+    """Registering the DataSource marks no package module for cloudpickle
+    by-value pickling: every Python process Spark starts imports the
+    package, so a reader and a split pickle as references to their
+    classes, and an exception raised on a worker is the class the retry
+    machine catches."""
     from pyspark import cloudpickle
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from flink_big_query_connector_spark.sources import bq_datasource
-    from flink_big_query_connector_spark.streaming import (
-        client_provider as cprov,
-    )
 
     bq_datasource.register(spark)
-    assert cprov.__name__ in cloudpickle.list_registry_pickle_by_value()
-    # and the provider's client class is the module-global (not a lazy
-    # in-method import), keeping it inside the same by-value graph
-    assert hasattr(cprov, "FakeBigQuery")
+    assert not [
+        m
+        for m in cloudpickle.list_registry_pickle_by_value()
+        if m.startswith("flink_big_query_connector_spark")
+    ]
+    schema = StructType(
+        [StructField("id", LongType()), StructField("name", StringType())]
+    )
+    reader = bq_datasource.FakeBigQueryReader(
+        schema, {"root": "/r", "table": "p/d/t"}
+    )
+    assert len(cloudpickle.dumps(reader)) < 1024
+    split = bq_datasource._RangeSplit("p/d/t/streams/_default", 0, 1000)
+    assert len(cloudpickle.dumps(split)) < 200
